@@ -6,27 +6,56 @@ corpusama/source/reliefweb.py:47-63; database.py:57) and skips already-built
 outputs (secondary_pipeline.py:282-287). The Spark equivalent:
 
 - work is partitioned by `bucket = pmod(phash, nbuckets)` (the Iceberg
-  `bucket(N, phash)` transform shape);
-- each completed bucket appends a manifest row (bucket, run stats, ts) — the
-  `_log` analogue;
-- output uses dynamic partition overwrite, so re-running a bucket replaces
-  its files exactly (idempotent replay);
+  `bucket(N, phash)` transform shape) and runs in waves of buckets;
+- a wave is ONE Spark action: a dynamic-partition-overwrite write, so
+  re-running a bucket replaces its files exactly (idempotent replay), with
+  its row and keep counts riding the write as an Observation
+  (plans/metrics.py);
+- verification reads parquet footers, not data: rows are the row-group
+  ``num_rows`` and kept rows the ``drop_reason`` null count of the files
+  under ``out_path/bucket=<b>/`` (``keep`` is ``drop_reason IS NULL`` by
+  construction, pipeline._decide), and their totals must equal the
+  observed counts before the wave is marked done;
+- the wave's manifest rows (bucket, counts, run stamp, rule version — the
+  `_log` analogue) are those verified per-bucket footer counts, zeros for
+  empty buckets, appended as one parquet file by temp write + rename;
 - on restart, buckets already in the manifest are skipped via partition
   pruning on the bucket column.
 
+The manifest, the output footers and the snapshot log are read through
+the local filesystem (a shared mount on a cluster), not through Spark.
 With an Iceberg catalog the manifest + overwrite pair collapses into
 snapshot commits; the interface below is format-agnostic on purpose.
 """
 
 from __future__ import annotations
 
+import datetime
+import os
 import pathlib
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from corpusama_spark.pipeline import FilterConfig, lineage, run_pipeline
+from corpusama_spark import snapshots
+from corpusama_spark.pipeline import FilterConfig, run_pipeline
 from corpusama_spark.plans.metrics import metrics_row, observe_decisions
+
+# the columns and types the Spark-written lineage rows always had, so old
+# and new manifest files read together
+MANIFEST_SCHEMA = pa.schema(
+    [
+        ("bucket", pa.int32()),
+        ("n_rows", pa.int64()),
+        ("n_keep", pa.int64()),
+        ("run_id", pa.string()),
+        ("committed_at", pa.timestamp("us", tz="UTC")),
+        ("rule_version", pa.string()),
+    ]
+)
 
 
 def add_bucket(df: DataFrame, nbuckets: int) -> DataFrame:
@@ -37,11 +66,26 @@ def add_bucket(df: DataFrame, nbuckets: int) -> DataFrame:
     )
 
 
+def _data_files(directory: pathlib.Path) -> list[pathlib.Path]:
+    """Parquet data files of one directory; hidden and underscore files
+    (checksums, ``_SUCCESS``, uncommitted temp names) are not data."""
+    if not directory.is_dir():
+        return []
+    return sorted(
+        f
+        for f in directory.iterdir()
+        if f.suffix == ".parquet" and not f.name.startswith((".", "_"))
+    )
+
+
 def completed_buckets(spark: SparkSession, manifest_path: str) -> set[int]:
-    if not pathlib.Path(manifest_path).exists():
-        return set()
-    rows = spark.read.parquet(manifest_path).select("bucket").distinct().collect()
-    return {r.bucket for r in rows}
+    """Buckets with a manifest row: the ``bucket`` column of every
+    manifest file, read with pyarrow (no Spark job)."""
+    return {
+        b
+        for f in _data_files(pathlib.Path(manifest_path))
+        for b in pq.read_table(f, columns=["bucket"])["bucket"].to_pylist()
+    }
 
 
 def pending_buckets(
@@ -52,15 +96,96 @@ def pending_buckets(
     todo list is pure set arithmetic — NO corpus scan (the old
     distinct().collect() read every row's phash on every restart, a full
     table pass at 10^12 rows before the first wave ran — VERDICT r3).
-    Externally-bucketed inputs keep the distinct() scan: their ids are
-    data, not construction."""
+    Externally-bucketed inputs keep one aggregate over the bucket
+    column: their ids are data, not construction. The same pass checks
+    the layout — every row's bucket must be ``pmod(phash, nbuckets)`` —
+    and raises ``ValueError`` before anything is written, since a wave
+    over a mismatched layout can never verify."""
     if pre_bucketed:
-        return sorted(
-            r.bucket
-            for r in df.select("bucket").distinct().collect()
-            if r.bucket not in done
+        # a bare bucket-id frame carries no phash, hence no layout to check
+        stray = (
+            F.col("bucket") != F.pmod(F.col("phash"), F.lit(nbuckets))
+            if "phash" in df.columns
+            else F.lit(False)
         )
+        rows = df.groupBy("bucket").agg(F.count_if(stray).alias("stray")).collect()
+        n_stray = sum(r.stray for r in rows)
+        if n_stray:
+            raise ValueError(
+                f"{n_stray} input rows have bucket != pmod(phash, "
+                f"nbuckets={nbuckets}): the input was bucketed with another "
+                "bucket count; set FilterConfig.nbuckets to match it"
+            )
+        return sorted(r.bucket for r in rows if r.bucket not in done)
     return sorted(set(range(nbuckets)) - done)
+
+
+def _footer_counts(out_path: str, wave: list[int]) -> dict[int, tuple[int, int]]:
+    """bucket -> (rows, kept rows) from the parquet footers under
+    ``out_path/bucket=<b>/``: row-group ``num_rows`` and the
+    ``drop_reason`` null count. A row group without that null count
+    cannot be verified and fails the wave."""
+    counts = {}
+    for b in wave:
+        rows = keep = 0
+        for f in _data_files(pathlib.Path(out_path) / f"bucket={b}"):
+            md = pq.read_metadata(f)
+            col = next(
+                (
+                    i
+                    for i in range(md.num_columns)
+                    if md.schema.column(i).path == "drop_reason"
+                ),
+                None,
+            )
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if not rg.num_rows:
+                    continue
+                stats = None if col is None else rg.column(col).statistics
+                if stats is None or not stats.has_null_count:
+                    raise RuntimeError(
+                        f"commit verification failed for bucket {b}: {f.name} "
+                        "has no drop_reason null count in its footer"
+                    )
+                rows += rg.num_rows
+                keep += stats.null_count
+        counts[b] = (rows, keep)
+    return counts
+
+
+def _append_manifest(
+    manifest_path: str,
+    counts: dict[int, tuple[int, int]],
+    run_id: str,
+    rule_version: str,
+) -> None:
+    """Append one manifest file holding a row per bucket of ``counts``:
+    written under a dot-prefixed name every reader skips, then renamed
+    into place, so a crash leaves either no rows or all of them."""
+    d = pathlib.Path(manifest_path)
+    d.mkdir(parents=True, exist_ok=True)
+    bs = sorted(counts)
+    now = datetime.datetime.now(datetime.timezone.utc).replace(microsecond=0)
+    table = pa.table(
+        {
+            "bucket": bs,
+            "n_rows": [counts[b][0] for b in bs],
+            "n_keep": [counts[b][1] for b in bs],
+            "run_id": [run_id] * len(bs),
+            "committed_at": [now] * len(bs),
+            "rule_version": [rule_version] * len(bs),
+        },
+        schema=MANIFEST_SCHEMA,
+    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = d / f".{name}"
+    with open(tmp, "wb") as fh:
+        # readers use the parquet schema; an embedded Arrow copy is dead bytes
+        pq.write_table(table, fh, store_schema=False)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.rename(tmp, d / name)
 
 
 def run_checkpointed(
@@ -76,23 +201,31 @@ def run_checkpointed(
 ) -> int:
     """Run the filter job bucket-group-wise with mid-run restartability.
 
-    Returns the number of buckets processed this invocation.
-    ``fail_after_buckets`` injects a crash for restart tests (the reference's
-    abort/restart contract, reliefweb.py:55-56). With ``snapshot_dir`` each
-    verified wave also commits an atomic snapshot (snapshots.py — the
-    Iceberg commit shape), enabling ``read_as_of`` time travel; restart
-    derives done-ness from the manifest exactly as before, the snapshot
-    chain is the externally-visible commit log.
+    Returns the number of buckets processed this invocation. Each wave
+    is one write: the dynamic-partition-overwrite output write is the
+    wave's only Spark action, and it observes the wave's row and keep
+    counts. Verification reads the footers of the files that write
+    produced, not the data; a mismatch with the observed counts raises
+    ``commit verification failed`` before the wave is marked done. The
+    wave's manifest rows are then the verified per-bucket footer counts
+    (zeros for empty buckets), so restart skips exactly the verified
+    buckets. ``fail_after_buckets`` injects a crash for restart tests
+    (the reference's abort/restart contract, reliefweb.py:55-56).
+
+    With ``snapshot_dir`` each verified wave also commits an atomic
+    snapshot (snapshots.py — the Iceberg commit shape), enabling
+    ``read_as_of`` time travel; restart derives done-ness from the
+    manifest, the snapshot chain is the externally-visible commit log.
 
     ``wap_audit`` (X246; requires ``snapshot_dir``) turns each wave into
     a write-audit-publish cycle: the wave commits STAGED (invisible to
     every reader), ``wap_audit(metrics, written_df) -> bool`` judges it
     BEFORE the manifest marks the wave done, and only a passing wave is
-    published + recorded. A rejected wave abandons its staged snapshot
-    and raises — the manifest never saw it, so a restart after fixing
-    the gate re-runs exactly that wave (the dynamic-partition-overwrite
-    write is idempotent). Bad data never becomes readable history OR
-    restart-skippable state.
+    published + recorded. ``written_df`` is a lazy read of the wave's
+    buckets. A rejected wave abandons its staged snapshot and raises —
+    the manifest never saw it, so a restart after fixing the gate re-runs
+    exactly that wave (the write is idempotent). Bad data never becomes
+    readable history OR restart-skippable state.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     pre_bucketed = "bucket" in captions.columns
@@ -102,107 +235,52 @@ def run_checkpointed(
     if not todo:
         return 0
 
-    # group buckets into waves so a restart loses at most one wave; each wave
-    # is a partition-pruned scan + dynamic-partition-overwrite write
+    # group buckets into waves so a restart loses at most one wave
     wave_size = max(1, len(todo) // 4)
     processed = 0
     for i in range(0, len(todo), wave_size):
         wave = [int(b) for b in todo[i : i + wave_size]]
-        part = df.where(F.col("bucket").isin(wave))
-        # metrics ride the write itself (plans/metrics.py) — no second
-        # pipeline execution anywhere in the commit path
-        observed, obs = observe_decisions(run_pipeline(part, config))
-        (
-            observed.withColumn(
-                "bucket", F.pmod(F.col("phash"), F.lit(config.nbuckets)).cast("int")
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(out_path)
+        decided, obs = observe_decisions(
+            run_pipeline(df.where(F.col("bucket").isin(wave)), config)
         )
-        if wap_audit is not None and snapshot_dir is not None:
-            from corpusama_spark.snapshots import (
-                abandon_snapshot,
-                commit_staged,
-            )
-
-            m_w = metrics_row(obs)
-            staged_id = commit_staged(
-                snapshot_dir, run_id, wave, m_w["n_rows"], m_w["n_keep"]
-            )
-            written_preview = spark.read.parquet(out_path).where(
-                F.col("bucket").isin(wave)
-            )
-            if not wap_audit(m_w, written_preview):
-                abandon_snapshot(snapshot_dir, staged_id)
-                raise RuntimeError(
-                    f"WAP audit rejected wave {wave}: {m_w} — staged "
-                    "snapshot abandoned, wave left un-committed for re-run"
-                )
-        else:
-            staged_id = None
-        # lineage re-aggregates the JUST-WRITTEN partitions (bucket-pruned,
-        # two-column scan) instead of re-running the whole pipeline — at
-        # 10^12 rows the old shape re-decoded every image a second time
-        if pathlib.Path(out_path).exists():
-            written = spark.read.parquet(out_path).where(
-                F.col("bucket").isin(wave)
-            )
-            lineage(
-                written, run_id, config.nbuckets,
-                rule_version=config.rule_version(),
-            ).write.mode("append").parquet(manifest_path)
-        # commit verification: the in-flight counts the write observed must
-        # equal what the committed manifest says for this wave — a torn or
-        # short write fails the job here, before the wave is marked done
+        written = decided.withColumn(
+            "bucket", F.pmod(F.col("phash"), F.lit(config.nbuckets)).cast("int")
+        )
+        written.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
         m = metrics_row(obs)
-        committed_rows = (
-            (
-                spark.read.parquet(manifest_path)
-                .where(F.col("run_id") == run_id)
-                .where(F.col("bucket").isin(wave))
-                .groupBy("bucket")
-                .agg(F.sum("n_rows").alias("r"), F.sum("n_keep").alias("k"))
-                .collect()
-            )
-            if pathlib.Path(manifest_path).exists()
-            else []
+        counts = _footer_counts(out_path, wave)
+        footer = (
+            sum(r for r, _ in counts.values()),
+            sum(k for _, k in counts.values()),
         )
-        committed_r = sum(int(r.r or 0) for r in committed_rows)
-        committed_k = sum(int(r.k or 0) for r in committed_rows)
-        if (committed_r, committed_k) != (m["n_rows"], m["n_keep"]):
+        if footer != (m["n_rows"], m["n_keep"]):
             raise RuntimeError(
                 f"commit verification failed for wave {wave}: observed "
-                f"({m['n_rows']}, {m['n_keep']}) vs committed "
-                f"({committed_r}, {committed_k})"
+                f"({m['n_rows']}, {m['n_keep']}) vs footers {footer}"
             )
-        # EMPTY buckets write no output partitions, so lineage alone would
-        # never mark them done and every restart would re-enumerate them;
-        # stamp explicit zero rows so `done` converges to all of todo
-        empties = [b for b in wave if b not in {r.bucket for r in committed_rows}]
-        if empties:
-            spark.createDataFrame(
-                [
-                    (int(b), 0, 0, run_id, config.rule_version())
-                    for b in empties
-                ],
-                "bucket int, n_rows long, n_keep long, run_id string, "
-                "rule_version string",
-            ).withColumn(
-                "committed_at",
-                F.date_trunc("second", F.current_timestamp()),
-            ).write.mode("append").parquet(manifest_path)
-        if snapshot_dir is not None:
-            if staged_id is not None:
-                from corpusama_spark.snapshots import publish_snapshot
-
-                publish_snapshot(snapshot_dir, staged_id)
-            else:
-                from corpusama_spark.snapshots import commit_snapshot
-
-                commit_snapshot(
-                    snapshot_dir, run_id, wave, m["n_rows"], m["n_keep"]
+        staged_id = None
+        if wap_audit is not None and snapshot_dir is not None:
+            staged_id = snapshots.commit_staged(
+                snapshot_dir, run_id, wave, m["n_rows"], m["n_keep"]
+            )
+            preview = (
+                spark.read.schema(written.schema)
+                .parquet(out_path)
+                .where(F.col("bucket").isin(wave))
+            )
+            if not wap_audit(m, preview):
+                snapshots.abandon_snapshot(snapshot_dir, staged_id)
+                raise RuntimeError(
+                    f"WAP audit rejected wave {wave}: {m} — staged "
+                    "snapshot abandoned, wave left un-committed for re-run"
                 )
+        _append_manifest(manifest_path, counts, run_id, config.rule_version())
+        if staged_id is not None:
+            snapshots.publish_snapshot(snapshot_dir, staged_id)
+        elif snapshot_dir is not None:
+            snapshots.commit_snapshot(
+                snapshot_dir, run_id, wave, m["n_rows"], m["n_keep"]
+            )
         processed += len(wave)
         if fail_after_buckets is not None and processed >= fail_after_buckets:
             raise RuntimeError(f"injected failure after {processed} buckets")

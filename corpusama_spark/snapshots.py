@@ -314,7 +314,8 @@ def expire_snapshots(snap_dir: str, keep_last: int = 2) -> dict:
     # expired range itself retired — otherwise compacting a
     # rewrite_spec snapshot away would resurrect retired specs
     # (duplicates) or orphan staged rows (loss). live_specs reads the
-    # plural fields below alongside the per-commit singular ones.
+    # plural fields below alongside the per-commit singular ones; an
+    # earlier squash's base carries its state in those plural fields.
     retired_all = sorted(
         {r for s in old for r in s.get("retired_specs", [])}
     )
@@ -322,6 +323,7 @@ def expire_snapshots(snap_dir: str, keep_last: int = 2) -> dict:
         (
             {s["spec_id"] for s in old if "spec_id" in s}
             | {s["staging_pspec"] for s in old if "staging_pspec" in s}
+            | {sid for s in old for sid in s.get("spec_ids", [])}
         )
         - set(retired_all)
     )

@@ -5,15 +5,20 @@ Local smoke run:
         --manifest /tmp/manifest
 
 Cluster run (north_rule shape):
-    cd /root/repo && zip -r /tmp/corpusama_spark.zip corpusama_spark
+    zip -r /tmp/corpusama_spark.zip corpusama_spark
     spark-submit --master <cluster> --py-files /tmp/corpusama_spark.zip \
         scripts/run_filter_job.py --input s3://.../captions \
-        --output s3://.../decisions --manifest s3://.../manifest \
+        --output /mnt/shared/decisions --manifest /mnt/shared/manifest \
         --target-lang en --num-partitions 4096
 
 The job is restartable: re-running with the same --manifest resumes at the
-first uncommitted bucket wave (checkpoint.run_checkpointed). Use --stream to
-drain new files incrementally instead (exactly-once, streaming checkpoint).
+first uncommitted bucket wave (checkpoint.run_checkpointed). This script
+reads the output's parquet footers, the manifest and the snapshot log
+through the local filesystem of the machine it runs on, so --output and
+--manifest must be paths mounted there (and shared with the executors on
+a cluster).
+Use --stream to drain new files incrementally instead (exactly-once,
+streaming checkpoint).
 """
 
 from __future__ import annotations

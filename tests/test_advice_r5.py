@@ -169,3 +169,25 @@ def test_expiry_squash_preserves_spec_state(spark, tmp_path):
         r.image_id for r in read_with_specs(spark, out, snaps).collect()
     )
     assert after == before == list(range(100))
+
+
+def test_double_expiry_preserves_squashed_spec_state(spark, tmp_path):
+    """A second expiry squashes the first one's base: the spec ids that
+    base carries (including the committed rewrite's staging pspec) must
+    survive, or read_with_specs silently drops the migrated rows."""
+    out, snaps = str(tmp_path / "out"), str(tmp_path / "snaps")
+    _setup_two_specs(spark, out, snaps)
+    rewrite_spec(spark, out, snaps, "migrate")
+    for i, lo in enumerate((80, 90)):
+        spec = write_with_spec(_batch(spark, lo, lo + 10), out, snaps)
+        commit_snapshot(snaps, f"r{4 + i}", [3 + i], 10, 10, spec_id=spec["spec_id"])
+    assert expire_snapshots(snaps, keep_last=2)["expire_ids"]
+    for i, lo in enumerate((100, 110)):
+        spec = write_with_spec(_batch(spark, lo, lo + 10), out, snaps)
+        commit_snapshot(snaps, f"r{6 + i}", [5 + i], 10, 10, spec_id=spec["spec_id"])
+    assert expire_snapshots(snaps, keep_last=2)["expire_ids"]
+    assert live_specs(snaps) == {1, -2}
+    after = sorted(
+        r.image_id for r in read_with_specs(spark, out, snaps).collect()
+    )
+    assert after == list(range(120))

@@ -5,6 +5,7 @@ corpus/langid.py:39-40, column drop lists attribute.py:142-144); here they
 must come out of Catalyst — these tests pin that they actually do.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from corpusama_spark.pipeline import FilterConfig, narrow_decisions, run_pipeline
@@ -166,17 +167,24 @@ def test_training_sample_filter_below_rank(spark, tmp_path):
     assert 0 <= i_rank < i_filter  # filter prints below (after) the rank node
 
 
-def test_no_row_python_in_any_contract_query(spark):
-    """Blanket pin: NO contract query may carry a row-at-a-time Python UDF
-    (BatchEvalPython) anywhere in its physical plan — the engine-wide
-    'Arrow or JVM only' rule, checked on every queries() entry at once."""
+@pytest.fixture(scope="module")
+def contract_plans(spark):
+    """Every queries() entry built once; the blanket plan sweeps below all
+    walk these same DataFrames."""
     import __spark_entry__ as E
 
     sf = "/root/testdata/sf0.001"
+    return {name: fn(spark, sf) for name, fn in E.queries().items()}
+
+
+def test_no_row_python_in_any_contract_query(contract_plans):
+    """Blanket pin: NO contract query may carry a row-at-a-time Python UDF
+    (BatchEvalPython) anywhere in its physical plan — the engine-wide
+    'Arrow or JVM only' rule, checked on every queries() entry at once."""
     offenders = []
-    for name, fn in E.queries().items():
+    for name, df in contract_plans.items():
         try:
-            audit.report(fn(spark, sf)).assert_no_row_python()
+            audit.report(df).assert_no_row_python()
         except AssertionError:
             offenders.append(name)
     assert not offenders, offenders
@@ -201,20 +209,17 @@ UNPARTITIONED_WINDOW_WHITELIST = {
 }
 
 
-def test_no_unpartitioned_window_in_any_contract_query(spark):
+def test_no_unpartitioned_window_in_any_contract_query(contract_plans):
     """Blanket pin for the round-4 verdict's X271-class defect: no contract
     query may move corpus-sized data through a single-task window. Every
     queries() entry is plan-audited; the only allowed unpartitioned windows
     are the whitelisted bounded-input sites above (bin/stage/day/k-sized
     tables, documented per query). heaps_fit / mwu_test / snb_pairs — the
     three operators round 4 flagged — must stay CLEAN, not whitelisted."""
-    import __spark_entry__ as E
-
-    sf = "/root/testdata/sf0.001"
     offenders, stale = [], []
     flagged = set()
-    for name, fn in E.queries().items():
-        bad = audit.unpartitioned_windows(fn(spark, sf))
+    for name, df in contract_plans.items():
+        bad = audit.unpartitioned_windows(df)
         if bad:
             flagged.add(name)
             if name not in UNPARTITIONED_WINDOW_WHITELIST:
