@@ -74,7 +74,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     captions = captions_from_documents(docs)
-    decisions = run_pipeline(captions, FilterConfig(nbuckets=16, salt_buckets=4))
+    decisions = run_pipeline(captions, FilterConfig(nbuckets=16))
     return decisions.select(
         "image_id",
         "fmt",
@@ -1019,7 +1019,7 @@ def q_flagship_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic keep rule."""
     docs = _t(spark, sf_dir, "documents")
     captions = captions_from_documents(docs)
-    return metrics(run_pipeline(captions, FilterConfig(nbuckets=16, salt_buckets=4)))
+    return metrics(run_pipeline(captions, FilterConfig(nbuckets=16)))
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1777,7 +1777,7 @@ def q_lid_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rows-only; model is a UDF)."""
     docs = _t(spark, sf_dir, "documents")
     captions = captions_from_documents(docs)
-    decisions = run_pipeline(captions, FilterConfig(nbuckets=16, salt_buckets=4))
+    decisions = run_pipeline(captions, FilterConfig(nbuckets=16))
     return decisions.select(
         "image_id",
         "l1",
@@ -2272,7 +2272,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew diagnostics over events.user_id (X68, operators/skew.py):
     top-10 heaviest keys with share / skew-vs-mean / suggested salt factor
-    — the data-driven gate for salt_buckets= and presplit_hours= choices.
+    — the data-driven gate for salt-factor and presplit_hours= choices.
     One groupBy + broadcast single-row totals + TakeOrderedAndProject."""
     from corpusama_spark.operators.skew import skew_report
 

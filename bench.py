@@ -258,8 +258,9 @@ def main() -> None:
     # throughput = best of the subsequent runs, which also rides out the
     # sandbox host's noisy-neighbor variance
     # both physical strategies of the same (value-identical, test-pinned)
-    # decision computation are timed: the two-branch salted/repartitioned
-    # plan and the zero-shuffle narrow plan (the streaming shape). The
+    # decision computation are timed: the two-branch staged plan (text side
+    # repartitioned by image_id) and the zero-shuffle narrow plan (the
+    # streaming shape). The
     # headline img/s takes the better plan. The winner is INPUT-SIZE
     # dependent: at 160k rows the two-branch plan wins (~3.8-4.8 s vs
     # 5-7 s at local[32]) because narrow chains multiple ArrowEvalPython

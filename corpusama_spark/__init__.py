@@ -16,8 +16,9 @@ equivalent of the reference's langid → attribute → export pipeline
 Design rules (BASELINE.json north_rule):
 - No per-row Python on the hot path: built-in Column expressions wherever
   expressible; Arrow-batched pandas UDFs (SCALAR / SCALAR_ITER) otherwise.
-- Partitioning by pmod(phash, nbuckets) with explicit salting for
-  caption-length skew.
+- Partitioning by pmod(phash, nbuckets) for storage; the text stage runs
+  behind a hash(image_id) exchange so caption-length skew never follows
+  the storage layout.
 - Checkpointed, idempotent partition writes for mid-run restartability.
 """
 

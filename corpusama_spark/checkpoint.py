@@ -217,7 +217,8 @@ def run_checkpointed(
     ``read_as_of`` time travel; restart derives done-ness from the
     manifest, the snapshot chain is the externally-visible commit log.
 
-    ``wap_audit`` (X246; requires ``snapshot_dir``) turns each wave into
+    ``wap_audit`` (X246; requires ``snapshot_dir``, else ``ValueError``
+    before anything is written) turns each wave into
     a write-audit-publish cycle: the wave commits STAGED (invisible to
     every reader), ``wap_audit(metrics, written_df) -> bool`` judges it
     BEFORE the manifest marks the wave done, and only a passing wave is
@@ -227,6 +228,11 @@ def run_checkpointed(
     exactly that wave (the write is idempotent). Bad data never becomes
     readable history OR restart-skippable state.
     """
+    if wap_audit is not None and snapshot_dir is None:
+        raise ValueError(
+            "wap_audit needs snapshot_dir: a wave is audited as a staged "
+            "snapshot, so without a snapshot log nothing would be gated"
+        )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     pre_bucketed = "bucket" in captions.columns
     df = add_bucket(captions, config.nbuckets)
@@ -259,7 +265,7 @@ def run_checkpointed(
                 f"({m['n_rows']}, {m['n_keep']}) vs footers {footer}"
             )
         staged_id = None
-        if wap_audit is not None and snapshot_dir is not None:
+        if wap_audit is not None:
             staged_id = snapshots.commit_staged(
                 snapshot_dir, run_id, wave, m["n_rows"], m["n_keep"]
             )

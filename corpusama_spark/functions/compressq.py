@@ -42,8 +42,7 @@ __all__ = [
 _LEVEL = 6  # zlib default; FIXED so the signal is reproducible
 
 
-@pandas_udf("struct<n_bytes: long, n_comp: long>")
-def _comp_sizes(texts: pd.Series) -> pd.DataFrame:
+def _comp_sizes_batch(texts: pd.Series) -> pd.DataFrame:
     raw = texts.fillna("").str.encode("utf-8")
     n_bytes = raw.str.len().astype("int64")
     n_comp = raw.map(lambda b: len(zlib.compress(b, _LEVEL))).astype("int64")
@@ -54,7 +53,8 @@ def compress_ratio(text_col: Column) -> Column:
     """struct(n_bytes, n_comp) for the UTF-8 encoding of the column;
     ratio = n_comp / n_bytes is computed relationally on top so the
     Python boundary ships two integers per row, nothing float."""
-    return _comp_sizes(text_col)
+    udf = pandas_udf(_comp_sizes_batch, "struct<n_bytes: long, n_comp: long>")
+    return udf(text_col)  # built per call: binds the live SparkContext
 
 
 def compression_gate(
@@ -86,8 +86,7 @@ def compression_gate(
     )
 
 
-@pandas_udf("struct<c_a: long, c_b: long, c_ab: long>")
-def _pair_sizes(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+def _pair_sizes_batch(a: pd.Series, b: pd.Series) -> pd.DataFrame:
     ra = a.fillna("").str.encode("utf-8")
     rb = b.fillna("").str.encode("utf-8")
     return pd.DataFrame(
@@ -130,8 +129,9 @@ def ncd_pairs(
 
     Output: input columns + c_a, c_b, c_ab, ncd (6 dp), near_dup.
     """
+    udf = pandas_udf(_pair_sizes_batch, "struct<c_a: long, c_b: long, c_ab: long>")
     sized = pairs.withColumn(
-        "_s", _pair_sizes(F.col(a_col), F.col(b_col))
+        "_s", udf(F.col(a_col), F.col(b_col))
     ).select(
         "*",
         F.col("_s.c_a").alias("c_a"),
@@ -221,8 +221,7 @@ def train_shared_dict(
     ).select(F.col("g").alias(group_col), "dict_text")
 
 
-@pandas_udf("struct<n_solo: long, n_dict: long>")
-def _dict_sizes(texts: pd.Series, dicts: pd.Series) -> pd.DataFrame:
+def _dict_sizes_batch(texts: pd.Series, dicts: pd.Series) -> pd.DataFrame:
     raw = texts.fillna("").str.encode("utf-8")
     zd = dicts.fillna("").str.encode("utf-8")
 
@@ -265,11 +264,12 @@ def dict_gain(
         group_col,
         "left",
     )
+    udf = pandas_udf(_dict_sizes_batch, "struct<n_solo: long, n_dict: long>")
     sized = joined.select(
         id_col,
         group_col,
         F.coalesce(F.octet_length(text_col), F.lit(0)).alias("_nb"),
-        _dict_sizes(F.col(text_col), F.coalesce(F.col("_dict"), F.lit(""))).alias("_s"),
+        udf(F.col(text_col), F.coalesce(F.col("_dict"), F.lit(""))).alias("_s"),
     ).select(
         id_col,
         group_col,

@@ -128,8 +128,7 @@ def _features_one(data, fmt) -> tuple:
     )
 
 
-@F.pandas_udf(FEATURES_SCHEMA)
-def _features_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
+def _features_batch(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
     rows = [_features_one(d, f) for d, f in zip(data, fmt)]
     return pd.DataFrame(rows, columns=[f.name for f in FEATURES_SCHEMA.fields])
 
@@ -139,7 +138,8 @@ def image_features(
 ) -> Column:
     """struct of channel/luma stats + 64-bit perceptual hash; narrow."""
     as_col = lambda c: F.col(c) if isinstance(c, str) else c  # noqa: E731
-    return _features_udf(as_col(bytes_col), as_col(fmt_col))
+    udf = F.pandas_udf(_features_batch, FEATURES_SCHEMA)  # per call: see verify_image
+    return udf(as_col(bytes_col), as_col(fmt_col))
 
 
 def resize_nn(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:

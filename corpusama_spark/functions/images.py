@@ -75,8 +75,7 @@ def _verify_one(data, fmt: str, w, h) -> tuple:
     return (True, None, None if np.isinf(db) else float(db))
 
 
-@F.pandas_udf(VERIFY_SCHEMA)
-def _verify_udf(
+def _verify_batch(
     data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series
 ) -> pd.DataFrame:
     rows = [
@@ -92,9 +91,13 @@ def verify_image(
     w_col: Column | str = "w",
     h_col: Column | str = "h",
 ) -> Column:
-    """struct(image_ok, image_reason, image_psnr) — narrow, Arrow-batched."""
+    """struct(image_ok, image_reason, image_psnr) — narrow, Arrow-batched.
+    The UDF is built per call: a UDF object binds the accumulator of the
+    first SparkContext that runs it, so a module-level one would break
+    after a session restart."""
     as_col = lambda c: F.col(c) if isinstance(c, str) else c  # noqa: E731
-    return _verify_udf(as_col(bytes_col), as_col(fmt_col), as_col(w_col), as_col(h_col))
+    udf = F.pandas_udf(_verify_batch, VERIFY_SCHEMA)
+    return udf(as_col(bytes_col), as_col(fmt_col), as_col(w_col), as_col(h_col))
 
 
 def verify_images(df: DataFrame) -> DataFrame:

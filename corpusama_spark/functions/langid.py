@@ -213,8 +213,7 @@ def load_model() -> object:
     return TrigramModel.train(SEED_SENTENCES)
 
 
-@F.pandas_udf(PREDICT_SCHEMA)
-def _predict_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+def _predict_batches(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     model = load_model()
     for lines in batches:
         vals = lines.fillna("")
@@ -223,8 +222,10 @@ def _predict_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 
 
 def predict_line(col: Column | str) -> Column:
-    """cleaned line → struct(lang, score); model cached per worker."""
-    return _predict_udf(F.col(col) if isinstance(col, str) else col)
+    """cleaned line → struct(lang, score); model cached per worker. The
+    UDF is built per call so it never outlives its SparkContext."""
+    udf = F.pandas_udf(_predict_batches, PREDICT_SCHEMA)
+    return udf(F.col(col) if isinstance(col, str) else col)
 
 
 def explode_lines(df: DataFrame, id_col: str = "image_id", lines_col: str = "lines") -> DataFrame:
@@ -292,14 +293,16 @@ def aggregate_lid(
         " when a.lang < b.lang then -1 when a.lang > b.lang then 1 else 0 end)"
     )
     empty = F.size("lid_arr") == 0
+    # try_element_at: under ANSI mode element_at raises on an empty array
+    first = F.try_element_at("lid_arr", F.lit(1))
     return (
         per_doc.select(id_col, sorted_arr.alias("lid_arr"))
         .select(
             id_col,
             "lid_arr",
             F.when(~empty, F.map_from_entries("lid_arr")).alias("lid"),
-            F.element_at("lid_arr", 1)["lang"].alias("l1"),
-            F.element_at("lid_arr", 1)["share"].alias("l1_size"),
+            first["lang"].alias("l1"),
+            first["share"].alias("l1_size"),
             F.when(
                 ~empty,
                 F.size(

@@ -220,24 +220,26 @@ def html_to_text(markup: str):
 # --- Spark surfaces ---------------------------------------------------------
 
 
-@F.pandas_udf(StringType())
-def _normalize_doc_udf(s: pd.Series) -> pd.Series:
+def _normalize_doc_batch(s: pd.Series) -> pd.Series:
     return s.map(lambda x: normalize_doc(x) if isinstance(x, str) else x)
 
 
-@F.pandas_udf(StringType())
-def _html_to_text_udf(s: pd.Series) -> pd.Series:
+def _html_to_text_batch(s: pd.Series) -> pd.Series:
     return s.map(html_to_text)
 
 
 def html_to_text_col(col: Column | str) -> Column:
     """HTML → text (F12), Arrow-batched; NULL passes through."""
-    return _html_to_text_udf(F.col(col) if isinstance(col, str) else col)
+    udf = F.pandas_udf(_html_to_text_batch, StringType())
+    return udf(F.col(col) if isinstance(col, str) else col)
 
 
 def normalize_caption(col: Column | str) -> Column:
-    """caption → normalized caption (trailing \\n per kept line), NULL-safe."""
-    return _normalize_doc_udf(F.col(col) if isinstance(col, str) else col)
+    """caption → normalized caption (trailing \\n per kept line), NULL-safe.
+    Like every pandas UDF here it is built per call, so it binds the
+    current SparkContext, not one a session restart has stopped."""
+    udf = F.pandas_udf(_normalize_doc_batch, StringType())
+    return udf(F.col(col) if isinstance(col, str) else col)
 
 
 def fold_quotes_dashes_col(col: Column) -> Column:

@@ -93,13 +93,14 @@ def get_model() -> BigramLM:
     return _MODEL
 
 
-@F.pandas_udf(DoubleType())
-def _ppl_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+def _ppl_batches(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     model = get_model()
     for texts in batches:
         yield pd.Series(model.perplexity_batch(texts))
 
 
 def perplexity(col: Column | str) -> Column:
-    """normalized caption → char-bigram perplexity (inf for NULL/empty)."""
-    return _ppl_udf(F.col(col) if isinstance(col, str) else col)
+    """normalized caption → char-bigram perplexity (inf for NULL/empty).
+    The UDF is built per call so it never outlives its SparkContext."""
+    udf = F.pandas_udf(_ppl_batches, DoubleType())
+    return udf(F.col(col) if isinstance(col, str) else col)

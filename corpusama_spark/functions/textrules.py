@@ -73,8 +73,7 @@ PREP_SCHEMA = StructType(
 )
 
 
-@F.pandas_udf(PREP_SCHEMA)
-def _prep_udf(captions: pd.Series) -> pd.DataFrame:
+def _prep_batch(captions: pd.Series) -> pd.DataFrame:
     norms: list[str | None] = []
     lines_col: list[list[str] | None] = []
     for cap in captions:
@@ -96,8 +95,10 @@ def _prep_udf(captions: pd.Series) -> pd.DataFrame:
 
 
 def prep_caption(col: Column | str) -> Column:
-    """caption → struct(caption_norm, lines) in one Arrow pass."""
-    return _prep_udf(F.col(col) if isinstance(col, str) else col)
+    """caption → struct(caption_norm, lines) in one Arrow pass. The UDF is
+    built per call so it never outlives its SparkContext."""
+    udf = F.pandas_udf(_prep_batch, PREP_SCHEMA)
+    return udf(F.col(col) if isinstance(col, str) else col)
 
 
 # --- pure-JVM predicates ----------------------------------------------------

@@ -1,10 +1,10 @@
 """Key-skew diagnostics — the planning view for salting decisions.
 
-Every skew mitigation in the engine (flagship salt buckets, split-and-merge
-sessionization, banded-dedup flood guards) needs the same upstream fact:
+Every skew mitigation in the engine (split-and-merge sessionization,
+banded-dedup flood guards, salted exchanges) needs the same upstream fact:
 WHICH keys are hot and BY HOW MUCH. This operator turns that into a
 first-class relational query instead of ad-hoc notebook counts, so a
-deployment can gate `presplit_hours=` / `salt_buckets=` choices on data.
+deployment can gate `presplit_hours=` or salt-factor choices on data.
 
 Scale shape: one groupBy(key) count (the unavoidable pass), a single-row
 total broadcast back (the colloc.py marginal pattern), and a

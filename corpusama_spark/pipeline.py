@@ -2,38 +2,44 @@
 
 Spark-first re-expression of the reference's end-to-end flow
 (rw_corpora_update.py:36-79): ingest → language-ID → attributes → filtered
-export, collapsed into one declarative plan over the captions table, split
-into two branches so the image payload NEVER crosses a shuffle:
+export, collapsed into one declarative plan over the captions table.
+``run_pipeline`` is the one entry point for batch, checkpointed and
+streaming jobs; ``choose_plan`` picks the plan from the input alone.
+
+Staged plan (batch inputs): two branches, so the image payload NEVER
+crosses a shuffle:
 
     captions ─┬─► image branch: verify UDF in the SCAN stage (narrow);
               │     output is (image_id, fmt, w, h, ok, reason, psnr) —
               │     tens of bytes per row
               └─► text branch: select only (image_id, phash, caption)
                     ─► repartition(n, image_id)           (≤ ~1 KB/row)
-                    ─► prep UDF (normalize+clean, 1 Arrow pass)
-                    ─► fused lid UDF ─► ppl UDF ─► scrub exprs (all narrow)
+                    ─► fused text-stage UDF (normalize, clean, lid, ppl:
+                       one Arrow pass) ─► scrub exprs (all narrow)
     decision = text ⋈ image on image_id — the text side already satisfies
     the join's hash distribution from its repartition, so only the tiny
     image-branch output shuffles.
 
+Narrow plan (streaming inputs, ``narrow_decisions``): the same operators
+in the scan stage with no exchange, because a streaming self-join would
+need watermarks. Decision values are identical to the staged plan's.
+
 Scale notes (the 100 TB story):
 - Shuffled bytes ≈ caption text once + the small image-verify table. At
-  10^12 rows with ~100 KB images, shuffling `bytes` (the previous design)
-  would move the whole corpus; this plan moves ~0.1% of it.
-- Default langid is the FUSED path (functions/langid.lid_struct): language
-  shares need no cross-row state, so the explode → shuffle → aggregate →
-  join-back plan (kept under ``fused_langid=False`` for parity testing and
-  for the oracle-checked operator family) collapses into the same Arrow
-  exchange that already carries the cleaned lines.
+  10^12 rows with ~100 KB images, shuffling `bytes` would move the whole
+  corpus; this plan moves ~0.1% of it.
+- Language shares need no cross-row state, so language ID runs inside
+  the text-stage UDF (functions/fused.py) rather than as an explode →
+  shuffle → aggregate → join-back plan; the distributed operators stay in
+  functions/langid.py and are pinned value-identical to the kernel.
 - Skew: the repartition hashes image_id, decorrelating caption-length cost
-  from the storage layout (phash buckets). The unfused path repartitions by
-  (pmod(phash, nbuckets), salt) — the explicit salt the north rule asks
-  for — because its explode stage multiplies long captions into many rows.
+  from the storage layout (phash buckets), so a flood of one phash still
+  spreads over every partition.
 - The repartition passes an explicit partition COUNT: AQE would coalesce a
   column-only repartition to its advisory size, serializing the UDF stage.
 - All predicates are JVM expressions: whole-stage codegen end-to-end except
-  the Arrow UDF exchanges (prep+lid+ppl on the text branch, verify on the
-  image branch).
+  the two Arrow UDF exchanges (the text stage on the text branch, verify
+  on the image branch).
 """
 
 from __future__ import annotations
@@ -46,7 +52,7 @@ from pyspark.sql import functions as F
 from corpusama_spark.functions import langid as L
 from corpusama_spark.functions import textrules as T
 from corpusama_spark.functions.images import verify_image
-from corpusama_spark.functions.perplexity import DEFAULT_PPL_THRESHOLD, perplexity
+from corpusama_spark.functions.perplexity import DEFAULT_PPL_THRESHOLD
 from corpusama_spark.functions.scrub import scrub_caption
 
 
@@ -65,14 +71,11 @@ class FilterConfig:
     max_langs: int = 4
     ppl_threshold: float = DEFAULT_PPL_THRESHOLD
     nbuckets: int = 64
-    salt_buckets: int = 8
-    repartition: bool = True
     num_partitions: int | None = None  # None: 2x defaultParallelism
-    fused_langid: bool = True
 
     def rule_version(self) -> str:
         """Deterministic 12-hex version of the DECISION-relevant fields
-        (X251): execution knobs (partitions, bucketing, plan choice) are
+        (X251): execution knobs (partitions, bucketing) are
         EXCLUDED — two configs that keep/drop identically share a
         version, so changing parallelism never triggers a backfill."""
         import hashlib
@@ -113,8 +116,18 @@ def _n_parts(df: DataFrame, config: FilterConfig) -> int:
     )
 
 
+def choose_plan(captions: DataFrame) -> str:
+    """'narrow' for a streaming input, else 'staged'. A streaming frame
+    cannot take the staged plan's self-join without watermarks; a batch
+    frame takes the staged plan, whose text-side exchange balances
+    caption-length skew. Reads no data and no statistics."""
+    return "narrow" if captions.isStreaming else "staged"
+
+
 def run_pipeline(captions: DataFrame, config: FilterConfig = FilterConfig()) -> DataFrame:
     """captions table → decision table (no bytes column in output)."""
+    if choose_plan(captions) == "narrow":
+        return narrow_decisions(captions, config)
     image_side = captions.select(
         "image_id", "fmt", "w", "h", verify_image().alias("_iv")
     ).select(
@@ -126,40 +139,12 @@ def run_pipeline(captions: DataFrame, config: FilterConfig = FilterConfig()) -> 
         F.col("_iv.image_reason").alias("image_reason"),
         F.col("_iv.image_psnr").alias("image_psnr"),
     )
-
-    text = captions.select("image_id", "phash", "caption")
-    if config.repartition:
-        if config.fused_langid:
-            # hash(image_id) both balances caption-length skew and already
-            # satisfies the final join's required distribution
-            text = text.repartition(_n_parts(text, config), F.col("image_id"))
-        else:
-            text = text.repartition(
-                _n_parts(text, config),
-                F.pmod(F.col("phash"), F.lit(config.nbuckets)),
-                F.pmod(F.xxhash64("image_id"), F.lit(config.salt_buckets)),
-            )
-
-    if config.fused_langid:
-        with_lid = _apply_text_stage(text, config)
-    else:
-        prepped = (
-            text.withColumn("_p", T.prep_caption("caption"))
-            .withColumn("caption_norm", F.col("_p.caption_norm"))
-            .withColumn("lines", F.col("_p.lines"))
-            .drop("_p")
-            .withColumn("ppl", perplexity("caption_norm"))
-            .withColumn("caption_scrubbed", scrub_caption("caption_norm"))
-        )
-        labeled = L.label_lines(
-            L.explode_lines(prepped.select("image_id", "lines")),
-            min_len=config.min_len,
-            threshold=config.threshold,
-        )
-        lid = L.aggregate_lid(labeled, max_langs=config.max_langs)
-        with_lid = prepped.drop("lines").join(lid, "image_id", "left")
-
-    joined = with_lid.join(image_side, "image_id")
+    # hash(image_id) both balances caption-length skew and already
+    # satisfies the final join's required distribution
+    text = captions.select("image_id", "phash", "caption").repartition(
+        _n_parts(captions, config), F.col("image_id")
+    )
+    joined = _apply_text_stage(text, config).join(image_side, "image_id")
     return _decide(joined, config)
 
 
@@ -236,17 +221,19 @@ def narrow_decisions(
 ) -> DataFrame:
     """Single-branch ZERO-SHUFFLE variant of the filter plan.
 
-    Image verify, prep, fused lid, perplexity, scrub, and the rule chain all
-    evaluate in the scan stage — no repartition, no join. This is the plan
-    used by Structured Streaming (a streaming self-join would need
-    watermarks; a narrow plan needs nothing). Decision values are identical
-    to run_pipeline's.
+    Image verify, the fused text stage, scrub and the rule chain all
+    evaluate in the scan stage — no repartition, no join. ``run_pipeline``
+    takes this plan for streaming inputs (a streaming self-join would need
+    watermarks; a narrow plan needs nothing). Decision values are
+    identical to the staged plan's.
 
-    Batch-plan tradeoff (measured, BENCH.md): chaining all four Arrow UDF
-    nodes into one stage means 4x live Python workers per task slot plus
-    inter-UDF Arrow serialization, so on fresh sessions the STAGED
-    two-branch plan is ~30% faster despite its shuffle; narrow wins once
-    workers are pooled (long-lived sessions, streaming micro-batches).
+    Batch-plan tradeoff (BENCH.md): both Arrow UDF nodes (verify and the
+    text stage) chain into one stage, and the scan layout decides how
+    caption-length cost is balanced. BENCH.md measured the staged plan
+    faster on fresh sessions and this one faster at many rows per core or
+    in long-lived sessions, with a crossover that moved between hosts;
+    batch jobs take the staged plan so the plan never depends on the
+    session's age or on a row estimate.
     """
     with_image = captions.withColumn("_iv", verify_image()).select(
         "image_id",
@@ -260,71 +247,6 @@ def narrow_decisions(
         F.col("_iv.image_psnr").alias("image_psnr"),
     )
     return _decide(_apply_text_stage(with_image, config), config)
-
-
-# BENCH.md's measured staged-vs-narrow crossover: staged wins fresh at
-# 160k/local[32] (5k rows/core); narrow wins at 640k in both local[4] and
-# local[16] (160k / 40k rows/core) — midpoint threshold 20k rows/core.
-NARROW_ROWS_PER_CORE = 20_000
-# In a long-lived session the Python-worker fleet is already pooled and
-# narrow overtakes staged even at 160k/local[32] (BENCH.md: after ~6 runs,
-# 2.89 s narrow vs 5.76 s staged) — treat the session as warm past this.
-WARM_SESSION_SEC = 120.0
-# fallback row estimate when Catalyst has size but not count: captions rows
-# are dominated by the image payload (synth ~2-6 KB; crawl thumbnails same
-# order)
-EST_BYTES_PER_ROW = 4096
-
-
-def choose_plan(
-    captions: DataFrame,
-    row_hint: int | None = None,
-    session_age_sec: float | None = None,
-) -> str:
-    """'staged' or 'narrow' from BENCH.md's measured crossover, so a
-    deployment doesn't need the bench lore (VERDICT r3 'What's wrong' #3).
-
-    Inputs are estimate-grade on purpose: row count comes from ``row_hint``
-    or Catalyst plan statistics (rowCount when available, else
-    sizeInBytes/EST_BYTES_PER_ROW) — NEVER a count() pass; session age from
-    the SparkContext start time unless injected for tests. Both plans are
-    value-identical (test-pinned), so a wrong guess costs throughput only.
-    """
-    import time as _time
-
-    sc = captions.sparkSession.sparkContext
-    if session_age_sec is None:
-        session_age_sec = _time.time() - sc.startTime / 1000.0
-    if session_age_sec >= WARM_SESSION_SEC:
-        return "narrow"
-    if row_hint is None:
-        stats = captions._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            row_hint = int(str(rc.get()))
-        else:
-            row_hint = int(int(str(stats.sizeInBytes())) / EST_BYTES_PER_ROW)
-    cores = max(sc.defaultParallelism, 1)
-    return "narrow" if row_hint / cores >= NARROW_ROWS_PER_CORE else "staged"
-
-
-def decisions(
-    captions: DataFrame,
-    config: FilterConfig = FilterConfig(),
-    plan: str = "auto",
-    row_hint: int | None = None,
-    session_age_sec: float | None = None,
-) -> DataFrame:
-    """The filter pipeline with plan choice: 'staged' (run_pipeline's
-    two-branch repartitioned plan), 'narrow' (zero-shuffle scan-stage
-    plan), or 'auto' (choose_plan's measured heuristic)."""
-    if plan == "auto":
-        plan = choose_plan(captions, row_hint, session_age_sec)
-    if plan == "staged":
-        return run_pipeline(captions, config)
-    if plan == "narrow":
-        return narrow_decisions(captions, config)
-    raise ValueError(f"plan must be 'auto', 'staged' or 'narrow', got {plan!r}")
 
 
 def metrics(decisions: DataFrame) -> DataFrame:
@@ -353,22 +275,3 @@ def metrics(decisions: DataFrame) -> DataFrame:
         *[F.element_at("_q", i + 1).alias(f"q{i}") for i in range(5)],
     )
 
-
-def lineage(
-    decisions: DataFrame,
-    run_id: str,
-    nbuckets: int = 64,
-    rule_version: str = "legacy",
-) -> DataFrame:
-    """Per-partition lineage rows (north_rule): bucket → counts + run
-    stamp + the DECISION-rule version that produced the bucket (X251 —
-    what backfill_plan diffs against the current config)."""
-    return decisions.groupBy(
-        F.pmod(F.col("phash"), F.lit(nbuckets)).cast("int").alias("bucket")
-    ).agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.lit(run_id).alias("run_id"),
-        F.date_trunc("second", F.current_timestamp()).alias("committed_at"),
-        F.lit(rule_version).alias("rule_version"),
-    )

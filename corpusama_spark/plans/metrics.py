@@ -1,8 +1,9 @@
 """In-flight pipeline metrics via Spark's Observation API — zero extra pass.
 
-The north_rule asks for per-partition lineage + metrics tables. The engine
-has both as DataFrames (pipeline.metrics, pipeline.lineage), but each is a
-SECOND aggregation pass over the decision table. ``df.observe`` attaches
+The north_rule asks for per-partition lineage + metrics tables. Lineage
+rows are the checkpoint manifest, written from the output's parquet
+footers (checkpoint._append_manifest); ``pipeline.metrics`` is a
+DataFrame, but a SECOND aggregation pass over the decision table. ``df.observe`` attaches
 named aggregates to the SAME action that materializes the decisions — the
 metrics ride along with the write, costing one accumulator merge instead
 of a 10^12-row re-scan. That is the difference between "metrics" and

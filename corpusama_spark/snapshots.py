@@ -700,7 +700,11 @@ def bucket_commit_seq(
     horizon. This IS the data sequence number of every row in that
     bucket: the engine never needs a per-row seq column because a bucket
     is rewritten atomically by dynamic partition overwrite (latest
-    commit wins for the whole partition)."""
+    commit wins for the whole partition). A rollback re-adds buckets
+    without re-writing them, so they keep the number of the commit that
+    wrote them (rollback refuses buckets re-written since its target);
+    only when that commit has been squashed away by an expiry that also
+    replayed the bucket's drop does the rollback's own id stand in."""
     out: dict[int, int] = {}
     for s in snapshots(snap_dir):
         if snapshot_id is not None and s["snapshot_id"] > snapshot_id:
@@ -708,7 +712,10 @@ def bucket_commit_seq(
         if s.get("staged") or s.get("branch"):
             continue
         for b in s["buckets"]:
-            out[b] = s["snapshot_id"]
+            if "rollback_to" in s:
+                out.setdefault(b, s["snapshot_id"])
+            else:
+                out[b] = s["snapshot_id"]
     return out
 
 

@@ -141,7 +141,7 @@ def _gen_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         image_id = hashlib.sha1(f"img-{GLOBAL_SEED}-{idx}".encode()).hexdigest()[:16]
         # phash: deterministic 64-bit from pixels-domain seed; heavy-tailed
         # caption lengths make phash buckets skew-prone, which the pipeline's
-        # salting handles explicitly.
+        # hash(image_id) text exchange handles explicitly.
         phash = int.from_bytes(
             hashlib.blake2b(image_id.encode(), digest_size=8).digest(), "big"
         ) - (1 << 63)

@@ -10,10 +10,11 @@ equivalent is Structured Streaming over the input table directory with
   → with an Iceberg catalog, snapshot ids);
 - each trigger processes exactly the files not yet committed, then stops —
   the same "catch up, then exit" shape as the reference's harvest runs;
-- the filter plan is the zero-shuffle `narrow_decisions` variant, so the
-  stream needs no watermarks or state store: every micro-batch is
-  embarrassingly parallel and the sink append is idempotent per offset
-  range (exactly-once for the parquet/file sink).
+- the filter plan is `pipeline.run_pipeline`, which hands a streaming
+  frame to its zero-shuffle narrow plan (`choose_plan`), so the stream
+  needs no watermarks or state store: every micro-batch is embarrassingly
+  parallel and the sink append is idempotent per offset range
+  (exactly-once for the parquet/file sink).
 
 A crashed run restarts from the checkpoint and reprocesses at most one
 uncommitted micro-batch — the reference's "can be aborted and restarted
@@ -25,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from corpusama_spark.pipeline import FilterConfig, narrow_decisions
+from corpusama_spark.pipeline import FilterConfig, run_pipeline
 from corpusama_spark.sources.synth import CAPTIONS_SCHEMA
 
 
@@ -54,7 +55,7 @@ def stream_filter(
     With ``available_now=False`` it runs continuously on new files.
     """
     captions = read_caption_stream(spark, input_path)
-    decisions = narrow_decisions(captions, config)
+    decisions = run_pipeline(captions, config)
     writer = (
         decisions.writeStream.format("parquet")
         .option("path", output_path)
@@ -101,7 +102,7 @@ def stream_filter_snapshots(
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     captions = read_caption_stream(spark, input_path)
-    decisions = narrow_decisions(captions, config)
+    decisions = run_pipeline(captions, config)
 
     def sink(batch_df, batch_id: int) -> None:
         run_id = f"stream-{batch_id}"

@@ -59,6 +59,9 @@ def main() -> None:
         "[LO,HI] — a wave outside the band aborts un-committed for re-run",
     )
     args = ap.parse_args()
+    if args.wap_keep_rate and not args.snapshots:
+        ap.error("--wap-keep-rate needs --snapshots (waves are audited as "
+                 "staged snapshots)")
 
     spark = get_spark(app_name="corpusama-filter")
     config = FilterConfig(

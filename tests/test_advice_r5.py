@@ -14,7 +14,10 @@
    reporting drop-retained files as current partitions;
 5. (found while fixing 1) expire_snapshots preserves partition-spec
    state — squashing a rewrite snapshot must not resurrect retired
-   specs or orphan committed staged rows.
+   specs or orphan committed staged rows;
+6. rollback re-adds dropped buckets without re-stamping their data
+   sequence number, so an equality delete committed at or before the
+   rollback target still applies in read_as_of_mor.
 """
 
 import json
@@ -23,7 +26,9 @@ import pathlib
 import pyspark.sql.functions as F
 
 from corpusama_spark.snapshots import (
+    bucket_commit_seq,
     buckets_as_of,
+    commit_eq_delete,
     commit_snapshot,
     commit_to_branch,
     create_branch,
@@ -33,8 +38,10 @@ from corpusama_spark.snapshots import (
     fast_forward,
     live_specs,
     metadata_partitions,
+    read_as_of_mor,
     read_with_specs,
     rewrite_spec,
+    rollback,
     write_with_spec,
 )
 
@@ -191,3 +198,49 @@ def test_double_expiry_preserves_squashed_spec_state(spark, tmp_path):
         r.image_id for r in read_with_specs(spark, out, snaps).collect()
     )
     assert after == list(range(120))
+
+
+def test_rollback_does_not_resurrect_deleted_rows(spark, tmp_path):
+    out, snaps = str(tmp_path / "out"), str(tmp_path / "snaps")
+    spark.createDataFrame(
+        [(i, i % 2) for i in range(10)], "image_id long, bucket int"
+    ).write.partitionBy("bucket").mode("append").parquet(out)
+    s1 = commit_snapshot(snaps, "r1", [0, 1], 10, 10)
+    deleted = spark.createDataFrame([(2,), (3,)], "image_id long")
+    s2 = commit_eq_delete(deleted, out, snaps, "erase")
+    drop_partitions(snaps, "ttl", [0, 1])
+    rollback(snaps, "undo-ttl", s2)
+
+    def ids(sid=None):
+        return sorted(
+            r.image_id for r in read_as_of_mor(spark, out, snaps, sid).collect()
+        )
+
+    assert ids(s2) == [0, 1, 4, 5, 6, 7, 8, 9]
+    assert ids() == ids(s2)
+    # the re-added buckets were never re-written: same data sequence number
+    assert bucket_commit_seq(snaps) == {0: s1, 1: s1}
+
+    # expiry squashes the re-added buckets' original commit and their
+    # drop into a base without them: the rollback then stands in as their
+    # commit, so they stay listed, addressable and rollback-able
+    out2, snaps2 = str(tmp_path / "out2"), str(tmp_path / "snaps2")
+    spark.createDataFrame(
+        [(i, i % 3) for i in range(12)], "image_id long, bucket int"
+    ).write.partitionBy("bucket").mode("append").parquet(out2)
+    commit_snapshot(snaps2, "r1", [0, 1], 8, 8)
+    drop_partitions(snaps2, "ttl", [0, 1])
+    r3 = rollback(snaps2, "undo-ttl", 1)
+    commit_snapshot(snaps2, "r4", [2], 4, 4)
+    expire_snapshots(snaps2, keep_last=2)
+    assert buckets_as_of(snaps2) == {0, 1, 2}
+    assert bucket_commit_seq(snaps2) == {0: r3, 1: r3, 2: r3 + 1}
+    parts = metadata_partitions(spark, snaps2, out2).collect()
+    assert {(r.bucket, r.dropped) for r in parts} == {
+        (0, False), (1, False), (2, False)
+    }
+    rollback(snaps2, "back", r3)
+    assert buckets_as_of(snaps2) == {0, 1}
+    assert sorted(
+        r.image_id for r in read_as_of_mor(spark, out2, snaps2).collect()
+    ) == [i for i in range(12) if i % 3 != 2]

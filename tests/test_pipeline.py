@@ -7,9 +7,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from corpusama_spark.checkpoint import run_checkpointed
+from corpusama_spark.functions import langid as L
 from corpusama_spark.functions import scrub as S
+from corpusama_spark.functions import textrules as T
 from corpusama_spark.functions.perplexity import get_model
-from corpusama_spark.pipeline import FilterConfig, lineage, metrics, run_pipeline
+from corpusama_spark.functions.seedtext import SEED_SENTENCES
+from corpusama_spark.pipeline import (
+    FilterConfig,
+    _apply_text_stage,
+    choose_plan,
+    metrics,
+    run_pipeline,
+)
 from corpusama_spark.session import assert_no_row_python
 from corpusama_spark.sources.synth import captions_df
 
@@ -100,15 +109,11 @@ def test_pipeline_deterministic(spark):
     assert a == b
 
 
-def test_metrics_and_lineage(spark):
+def test_metrics_counts_every_row(spark):
     caps = captions_df(spark, 200, partitions=2)
     out = run_pipeline(caps, FilterConfig())
     m = metrics(out).collect()
     assert sum(r.n for r in m) == 200
-    lin = lineage(out, "run-x", 8).collect()
-    assert sum(r.n_rows for r in lin) == 200
-    assert all(r.run_id == "run-x" for r in lin)
-    assert {r.bucket for r in lin} <= set(range(8))
 
 
 def test_restart_enumeration_never_scans_derived_buckets(spark):
@@ -135,7 +140,7 @@ def test_checkpoint_empty_buckets_converge(spark, tmp_path):
     caps = captions_df(spark, 12, partitions=2)  # 12 rows << 32 buckets
     out_path = str(tmp_path / "out")
     mani = str(tmp_path / "manifest")
-    cfg = FilterConfig(nbuckets=32, repartition=False)
+    cfg = FilterConfig(nbuckets=32)
     n1 = run_checkpointed(spark, caps, out_path, mani, cfg, "run-1")
     assert n1 == 32
     done = spark.read.parquet(mani).select("bucket").distinct().count()
@@ -148,7 +153,7 @@ def test_checkpoint_restart(spark, tmp_path):
     caps = captions_df(spark, 200, partitions=4)
     out_path = str(tmp_path / "out")
     mani = str(tmp_path / "manifest")
-    cfg = FilterConfig(nbuckets=8, repartition=False)
+    cfg = FilterConfig(nbuckets=8)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_checkpointed(
             spark, caps, out_path, mani, cfg, "run-1", fail_after_buckets=2
@@ -164,36 +169,73 @@ def test_checkpoint_restart(spark, tmp_path):
     assert run_checkpointed(spark, caps, out_path, mani, cfg, "run-3") == 0
 
 
-def test_fused_langid_equals_distributed_plan(spark):
-    # the fused in-UDF analyze (langid.lid_struct / analyze_lines) must be
-    # value-identical to the explode -> label -> aggregate -> join plan,
-    # including NULL-vs-empty lid_arr edge cases and bround share rounding
-    caps = captions_df(spark, 400, partitions=8)
-    cols = [
-        "image_id",
-        "lid",
-        "lid_arr",
-        "l1",
-        "l1_size",
-        "multiling",
-        "drop_reason",
-        "keep",
+# edge captions for the kernel parity test. Six labels of ~1/6 of the
+# bytes each (en, fr, es, de, unknown, short) all fall under the
+# 1/(min(6, 4) + 1) = 0.2 cut: an EMPTY lid_arr, not a NULL one.
+EMPTY_LID_CAPTION = "\n".join(
+    [
+        SEED_SENTENCES["en"][0],
+        SEED_SENTENCES["fr"][0],
+        SEED_SENTENCES["es"][2],
+        SEED_SENTENCES["de"][0],
+        "zqxj wvkp zzqq xjwv zqxj wvkp zzqq xjwv qqzz kkww zqxj wvkp zzqq xjwv qqz",
     ]
+    + ["brief one"] * 8
+)
+# 25 + 15 bytes: shares 0.625 / 0.375 are exact binary halves, so
+# half-even rounding (bround, Python round) gives 0.62 / 0.38 where
+# half-up would give 0.63
+BROUND_CAPTION = "The distribution of emerg\nLa distribution"
+
+
+def test_fused_text_stage_equals_distributed_langid(spark):
+    """The fused text-stage kernel (functions/fused.py) must be
+    value-identical to the distributed langid operators
+    explode_lines → label_lines → aggregate_lid over prep_caption's lines,
+    left-joined back so captions without lines read NULL."""
+    cfg = FilterConfig()
+    caps = captions_df(spark, 400, partitions=8).select("image_id", "caption")
+    edges = spark.createDataFrame(
+        [("edge-empty", EMPTY_LID_CAPTION), ("edge-bround", BROUND_CAPTION)],
+        "image_id string, caption string",
+    )
+    text = caps.unionByName(edges)
+    cols = ["image_id", "lid", "lid_arr", "l1", "l1_size", "multiling"]
     fused = {
-        r["image_id"]: tuple(r)
-        for r in run_pipeline(caps, FilterConfig(fused_langid=True))
-        .select(*cols)
-        .collect()
+        r["image_id"]: r.asDict(recursive=True)
+        for r in _apply_text_stage(text, cfg).select(*cols).collect()
     }
+    prepped = text.select(
+        "image_id", T.prep_caption("caption").alias("p")
+    ).select("image_id", "p.lines")
+    lid = L.aggregate_lid(
+        L.label_lines(
+            L.explode_lines(prepped),
+            min_len=cfg.min_len,
+            threshold=cfg.threshold,
+        ),
+        max_langs=cfg.max_langs,
+    )
     dist = {
-        r["image_id"]: tuple(r)
-        for r in run_pipeline(caps, FilterConfig(fused_langid=False))
+        r["image_id"]: r.asDict(recursive=True)
+        for r in prepped.select("image_id")
+        .join(lid, "image_id", "left")
         .select(*cols)
         .collect()
     }
-    assert fused.keys() == dist.keys()
+    assert len(fused) == 402 and fused.keys() == dist.keys()
     mismatches = [(fused[k], dist[k]) for k in fused if fused[k] != dist[k]]
     assert not mismatches, mismatches[:3]
+
+    assert any(v["lid_arr"] is None for v in fused.values())  # no lines
+    empty = fused["edge-empty"]
+    assert empty["lid_arr"] == [] and empty["lid"] is None and empty["l1"] is None
+    rounded = fused["edge-bround"]
+    assert [(e["lang"], e["share"]) for e in rounded["lid_arr"]] == [
+        ("en", 0.62),
+        ("fr", 0.38),
+    ]
+    assert rounded["multiling"] is True
 
 
 def test_bytes_never_shuffled(spark):
@@ -234,26 +276,23 @@ def test_scrub_audit_counts_and_chain_order(spark):
     ).collect()
     assert all(r.a == r.b for r in both)
 
-def test_plan_auto_heuristic_and_value_identity(spark):
-    """VERDICT r3 'What's wrong' #3: plan='auto' picks staged vs narrow
-    from estimated rows/core and session age (BENCH.md crossover), never a
-    count() pass, and both choices stay value-identical."""
-    from corpusama_spark.pipeline import choose_plan, decisions
+def test_choose_plan_follows_input_kind(spark, tmp_path):
+    """The plan depends on the input alone: a batch frame takes the
+    staged plan and a streaming frame the narrow one (a streaming
+    self-join would need watermarks). Choosing reads no data, so it
+    launches no Spark job. Value identity of the two plans is pinned by
+    test_streaming.py::test_narrow_decisions_equal_run_pipeline."""
+    from corpusama_spark.streaming.incremental import read_caption_stream
 
     caps = captions_df(spark, 300, partitions=4)
-    # fresh session, tiny input -> staged; huge row hint -> narrow
-    assert choose_plan(caps, row_hint=300, session_age_sec=0.0) == "staged"
-    assert choose_plan(caps, row_hint=10**9, session_age_sec=0.0) == "narrow"
-    # warm session -> narrow regardless of size
-    assert choose_plan(caps, row_hint=300, session_age_sec=600.0) == "narrow"
-    # no hint: Catalyst stats estimate, still no job runs (lazy plan only)
-    assert choose_plan(caps, session_age_sec=0.0) in ("staged", "narrow")
-    cols = ["image_id", "keep", "drop_reason", "caption_scrubbed"]
-    a = sorted(map(tuple, decisions(caps, plan="staged").select(cols).collect()))
-    b = sorted(map(tuple, decisions(caps, plan="narrow").select(cols).collect()))
-    c = sorted(map(tuple, decisions(caps, plan="auto").select(cols).collect()))
-    assert a == b == c
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        decisions(caps, plan="fastest")
+    (tmp_path / "in").mkdir()
+    stream = read_caption_stream(spark, str(tmp_path / "in"))
+    sc = spark.sparkContext
+    sc.setJobGroup("choose-plan", "choose-plan")
+    try:
+        assert choose_plan(caps) == "staged"
+        assert choose_plan(stream) == "narrow"
+        assert run_pipeline(stream).isStreaming
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("choose-plan") == []

@@ -1,12 +1,15 @@
-"""Explicit skew handling (north_rule): salting must spread pathological
-key distributions across tasks.
+"""Explicit skew handling (north_rule): the filter plan must spread
+pathological key distributions across tasks.
 
 The hazard at 10^12 rows: phash buckets are the storage layout, and a
 boilerplate flood (millions of identical/near-identical images or captions)
-lands one bucket on one task, serializing the UDF stage. The unfused plan's
-repartition keys are (pmod(phash, nbuckets), salt) — the salt must spread a
-single hot bucket over many partitions.
+lands one bucket on one task, serializing the UDF stage. run_pipeline's
+text-side exchange hashes image_id, which is unique per row, into an
+explicit partition count — the per-row salt that spreads a single hot
+bucket over every partition.
 """
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,31 +18,31 @@ from corpusama_spark.pipeline import FilterConfig, run_pipeline
 from corpusama_spark.sources.synth import captions_df
 
 
-def _partition_sizes(df):
-    return [
-        r.n
-        for r in df.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    ]
-
-
 def test_salt_spreads_hot_phash_bucket(spark):
     # all rows forced into ONE phash bucket — the worst case
     caps = captions_df(spark, 400, partitions=4).withColumn("phash", F.lit(7))
-    salted = caps.repartition(
-        16,
-        F.pmod(F.col("phash"), F.lit(64)),
-        F.pmod(F.xxhash64("image_id"), F.lit(8)),
-    )
-    sizes = _partition_sizes(salted)
-    # without salt this is a single 400-row partition; with salt_buckets=8
-    # the hot bucket spreads over ~8 partitions
-    assert len(sizes) >= 6, sizes
-    assert max(sizes) < 400
-
-    unsalted = caps.repartition(16, F.pmod(F.col("phash"), F.lit(64)))
-    assert max(_partition_sizes(unsalted)) == 400
+    sc = spark.sparkContext
+    sc.setJobGroup("skew-plan", "skew-plan")
+    try:
+        plan = (
+            run_pipeline(caps, FilterConfig(num_partitions=16))
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the plan is read, not run
+    assert sc.statusTracker().getJobIdsForGroup("skew-plan") == []
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    # the text side hashes image_id into the explicit count; a column-only
+    # repartition would let AQE coalesce the UDF stage to one task
+    assert any(
+        re.search(r"hashpartitioning\(image_id#\d+, 16\), REPARTITION_BY_NUM", ln)
+        for ln in exchanges
+    ), plan
+    # no exchange keys on the hot storage key
+    assert not any("phash" in ln for ln in exchanges), plan
 
 
 def test_pipeline_correct_under_pathological_skew(spark):
@@ -49,15 +52,11 @@ def test_pipeline_correct_under_pathological_skew(spark):
     cols = ["image_id", "l1", "drop_reason", "keep"]
     a = {
         r["image_id"]: tuple(r)
-        for r in run_pipeline(caps, FilterConfig(fused_langid=False))
-        .select(*cols)
-        .collect()
+        for r in run_pipeline(caps, FilterConfig()).select(*cols).collect()
     }
     b = {
         r["image_id"]: tuple(r)
-        for r in run_pipeline(skewed, FilterConfig(fused_langid=False))
-        .select(*cols)
-        .collect()
+        for r in run_pipeline(skewed, FilterConfig()).select(*cols).collect()
     }
     assert a == b
 

@@ -49,7 +49,7 @@ def test_checkpointed_run_commits_snapshots_and_reads_as_of(spark, tmp_path):
     out, mani, snaps = (
         str(tmp_path / "out"), str(tmp_path / "mani"), str(tmp_path / "snaps")
     )
-    cfg = FilterConfig(nbuckets=8, repartition=False)
+    cfg = FilterConfig(nbuckets=8)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_checkpointed(
             spark, caps, out, mani, cfg, "run-1",

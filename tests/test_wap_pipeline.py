@@ -75,3 +75,43 @@ def test_wap_rejection_leaves_wave_rerunnable(spark, tmp_path):
     assert len(chain) == 4 and not any(s.get("staged") for s in chain)
     assert read_as_of(spark, out, snap).count() == 240
     assert n_after_fail < 240
+
+
+def test_wap_audit_without_snapshots_fails_before_writing(spark, tmp_path):
+    """An audit gate with no snapshot log to stage into cannot gate
+    anything: the call must refuse before any output or manifest exists
+    instead of committing every wave unaudited."""
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    caps = captions_df(spark, 40, partitions=2)
+    with pytest.raises(ValueError, match="snapshot_dir"):
+        run_checkpointed(
+            spark, caps, out, man, FilterConfig(nbuckets=2),
+            run_id="wap-no-log", wap_audit=lambda m, w: False,
+        )
+    assert not (tmp_path / "out").exists()
+    assert not (tmp_path / "man").exists()
+
+
+def test_job_script_rejects_wap_without_snapshots(tmp_path):
+    """scripts/run_filter_job.py --wap-keep-rate needs --snapshots: the
+    argument check fails before a SparkSession starts or a path is
+    touched."""
+    import pathlib
+    import subprocess
+    import sys
+
+    script = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "run_filter_job.py"
+    out = tmp_path / "out"
+    proc = subprocess.run(
+        [
+            sys.executable, str(script),
+            "--input", str(tmp_path / "missing-input"),
+            "--output", str(out),
+            "--manifest", str(tmp_path / "man"),
+            "--wap-keep-rate", "0.1,0.9",
+        ],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert "--snapshots" in proc.stderr
+    assert not out.exists()
