@@ -5564,7 +5564,7 @@ def q_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map data skipping audit (X273 — the Iceberg manifest
-    lower/upper-bounds shape, snapshots.compute_column_stats /
+    lower/upper-bounds shape, tableops.compute_column_stats /
     plan_scan_for_range / read_range; the physical bucket-skip lane is
     pytest-driven in test_zonemap_rollback.py, this is its exact
     relational twin over a time-clustered layout): orders bucketed by
@@ -5614,7 +5614,7 @@ def q_bound_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered layout's depth is 0 (years partition dates: every range
     predicate can prune), the hashed layout's is nbuckets-1 (nothing
     ever prunes) — the quantified reason layout.py's write path
-    clusters before snapshots.py's zone maps can skip (X273)."""
+    clusters before tableops.py's zone maps can skip (X273)."""
     from corpusama_spark.operators.layout import bound_overlap_audit
 
     o = _t(spark, sf_dir, "orders").select(

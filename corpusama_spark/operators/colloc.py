@@ -226,6 +226,7 @@ def frequency_profile(
         attach_global_positions,
         ranged_cumsum,
     )
+    from corpusama_spark.plans.caching import own_caches
 
     uni = (
         docs.select(F.explode(_words(F.col(text_col))).alias("tok"))
@@ -237,12 +238,13 @@ def frequency_profile(
     )
     cum = ranged_cumsum(ranked, ["rank"], ["freq"])
     tot = uni.agg(F.sum("freq").cast("double").alias("_tot"))
-    return cum.crossJoin(F.broadcast(tot)).select(
+    out = cum.crossJoin(F.broadcast(tot)).select(
         "tok",
         "freq",
         F.col("rank").cast("int").alias("rank"),
         F.round(F.col("cum_freq") / F.col("_tot"), 6).alias("cum_share"),
     )
+    return own_caches(out, ranked, cum)
 
 
 def burrows_delta(

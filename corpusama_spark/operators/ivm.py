@@ -2,7 +2,7 @@
 DELTAS instead of recomputation.
 
 The consumer half of the CDC lane (operators/upsert.row_changelog /
-snapshots.snapshot_changelog, X253): a 10^12-row corpus's rollups
+tableops.snapshot_changelog, X253): a 10^12-row corpus's rollups
 (per-source keep counts, per-language byte sums, dashboard aggregates)
 cannot be recomputed on every upsert wave — the standard answer is IVM
 (classic database literature: Gupta & Mumick's "Maintenance of

@@ -210,6 +210,7 @@ def pruning_audit(
     ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
     z = zorder_key(F.col("a"), F.col("b"), bits=bits)
     from corpusama_spark.operators.prefixsum import ranged_ntile
+    from corpusama_spark.plans.caching import own_caches
 
     base = base.withColumn("zval", z)
     if hilbert_bits is not None:
@@ -218,10 +219,13 @@ def pruning_audit(
         # three-way comparison (with_hilbert_key pmods, so wider inputs
         # would wrap rather than clamp like the Morton key)
         base = with_hilbert_key(base, "a", "b", bits=hilbert_bits, out="hval")
-    tagged = ranged_ntile(base, ["a", "b", "id"], int(nfiles), "f_linear")
-    tagged = ranged_ntile(tagged, ["zval", "id"], int(nfiles), "f_zorder")
+    # each pass persists its range exchange; the result owns all of them
+    linear = ranged_ntile(base, ["a", "b", "id"], int(nfiles), "f_linear")
+    tagged = ranged_ntile(linear, ["zval", "id"], int(nfiles), "f_zorder")
+    passes = [linear, tagged]
     if hilbert_bits is not None:
         tagged = ranged_ntile(tagged, ["hval", "id"], int(nfiles), "f_hilbert")
+        passes.append(tagged)
     sel = (
         F.col("a").between(a_lo, a_hi) & F.col("b").between(b_lo, b_hi)
     ).cast("long")
@@ -255,7 +259,7 @@ def pruning_audit(
     )
     if hilbert_bits is not None:
         out = out.unionByName(_layout("f_hilbert", "hilbert"))
-    return out.select(
+    audit = out.select(
         "layout",
         "n_files",
         "files_scanned",
@@ -271,6 +275,7 @@ def pruning_audit(
             6,
         ).alias("read_amplification"),
     ).orderBy("layout")
+    return own_caches(audit, *passes)
 
 
 def with_hilbert_key(

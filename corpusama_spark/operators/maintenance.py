@@ -49,7 +49,7 @@ def orphan_scan(out_path: str, snap_dir: str) -> dict:
     stages) plus writer litter (_temporary dirs, .tmp/. staging files).
     Returns a dry-run plan: {live_buckets, orphan_buckets, orphan_files,
     orphan_bytes, litter}. Never deletes."""
-    from corpusama_spark.snapshots import storage_live_buckets
+    from corpusama_spark.tableops import storage_live_buckets
 
     root = pathlib.Path(out_path)
     # storage-live, not logically-live: a TTL-dropped bucket stays
@@ -208,35 +208,17 @@ def erasure_status(spark, out_path: str, snap_dir: str) -> dict:
     this further with per-file bloom sidecars (operators/bloom.py)."""
     from pyspark.sql import functions as F
 
-    from corpusama_spark.snapshots import (
-        bucket_commit_seq,
-        snapshots as _snaps,
-    )
+    from corpusama_spark.tableops import data_seq_col, eq_deletes_as_of
 
-    dels = []
-    key_cols = None
-    for s in _snaps(snap_dir):
-        if s.get("staged") or "eq_delete" not in s:
-            continue
-        key_cols = tuple(s["eq_delete"]["key_cols"])
-        d = spark.read.parquet(
-            f"{out_path.rstrip('/')}/{s['eq_delete']['path']}"
-        ).withColumn("delete_seq", F.lit(s["snapshot_id"]).cast("long"))
-        dels.append(d)
-    if not dels:
+    eq = eq_deletes_as_of(spark, out_path, snap_dir)
+    if eq is None:
         return {"n_delete_keys": 0, "residue_buckets": [], "n_residue_rows": 0}
-    eq = dels[0]
-    for d in dels[1:]:
-        eq = eq.unionByName(d)
+    key_cols = tuple(c for c in eq.columns if c != "delete_seq")
     eq_agg = eq.groupBy(*key_cols).agg(
         F.max("delete_seq").alias("delete_seq")
     )
-    seq_map = bucket_commit_seq(snap_dir)
     raw = spark.read.parquet(out_path).select(*key_cols, "bucket")
-    pairs = []
-    for b, sid in sorted(seq_map.items()):
-        pairs.extend([F.lit(int(b)), F.lit(int(sid))])
-    data_seq = F.create_map(*pairs)[F.col("bucket").cast("int")].cast("long")
+    data_seq = data_seq_col(snap_dir)
     residue = (
         raw.withColumn("_seq", data_seq)
         .join(F.broadcast(eq_agg), list(key_cols))
@@ -265,7 +247,8 @@ def rewrite_erased_buckets(
     compliance rewrites + expires old snapshots)."""
     import shutil
 
-    from corpusama_spark.snapshots import commit_snapshot, read_as_of_mor
+    from corpusama_spark.snapshots import commit_snapshot
+    from corpusama_spark.tableops import read_as_of_mor
 
     status = erasure_status(spark, out_path, snap_dir)
     buckets = status["residue_buckets"]

@@ -26,12 +26,19 @@ as corpus-sized unpartitioned windows).
 Determinism: ``order_cols`` must be a duplicate-free total order (add an
 id tie-break if the natural key can repeat) — both helpers assert
 nothing but document it, exactly like a SQL ORDER BY contract.
+
+Cache lifetime: the range-exchanged input is persisted (the offsets
+collect and the ranking pass both read it); every helper attaches it to
+its result with ``plans.caching.own_caches``, so the caller's
+``release`` frees it once the result is materialized.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from corpusama_spark.plans.caching import own_caches
 
 _PID = "_psum_pid"
 _OFF = "_psum_off"
@@ -97,7 +104,7 @@ def _positions_with_total(
         )
         .drop(_PID, _OFF)
     )
-    return out, total
+    return own_caches(out, ranged), total
 
 
 def attach_global_positions(
@@ -150,7 +157,8 @@ def ranged_cumsum(
             prefix + c,
             F.col(f"{_OFF}{i}") + F.coalesce(local, F.lit(0.0)),
         )
-    return out.drop(_PID, *[f"{_OFF}{i}" for i in range(len(sum_cols))])
+    out = out.drop(_PID, *[f"{_OFF}{i}" for i in range(len(sum_cols))])
+    return own_caches(out, ranged)
 
 
 def ranged_ntile(
@@ -180,4 +188,6 @@ def ranged_ntile(
         tile = F.when(
             p <= first, F.floor((p - 1) / (q + 1)) + 1
         ).otherwise(r + F.floor((p - first - 1) / q) + 1)
-    return pos.withColumn(out_col, tile.cast("int")).drop("_nt_pos")
+    return own_caches(
+        pos.withColumn(out_col, tile.cast("int")).drop("_nt_pos"), pos
+    )

@@ -55,6 +55,23 @@ from corpusama_spark.functions.images import verify_image
 from corpusama_spark.functions.perplexity import DEFAULT_PPL_THRESHOLD
 from corpusama_spark.functions.scrub import scrub_caption
 
+# every drop_reason ``_decide`` emits, in gate order; the image reasons
+# arrive through verify_image's ``image_reason`` (functions/images.py).
+# plans/metrics.py observes exactly these.
+DROP_REASONS = (
+    "caption_missing",
+    "caption_empty_norm",
+    "caption_too_short",
+    "too_few_tokens",
+    "image_missing",
+    "image_corrupt",
+    "image_dims_mismatch",
+    "image_reencode_failed",
+    "image_psnr_below_40db",
+    "lang_share",
+    "perplexity",
+)
+
 
 @dataclass(frozen=True)
 class FilterConfig:

@@ -9,7 +9,10 @@ partitions (VERDICT r1 "What's wrong" #5).
 Contract: an operator that persists attaches the handles to its result via
 ``own_caches``; the CALLER owns the lifetime and calls ``release`` once the
 result has been materialized (collected / written). Releasing before
-materialization is safe — the plan recomputes — just slower.
+materialization is safe — the plan recomputes — just slower. A handle may
+itself be an operator result that owns caches; ``release`` follows it, so
+an operator built on other operators' results attaches those results and
+its caller still releases everything with one call.
 """
 
 from __future__ import annotations
@@ -27,7 +30,9 @@ def own_caches(result: DataFrame, *handles: DataFrame) -> DataFrame:
 
 
 def release(result: DataFrame) -> None:
-    """Unpersist every cache an operator attached to ``result``."""
+    """Unpersist every cache an operator attached to ``result``, and
+    every cache those handles own in turn."""
     for h in getattr(result, _ATTR, []):
         h.unpersist()
+        release(h)
     setattr(result, _ATTR, [])

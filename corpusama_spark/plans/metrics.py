@@ -30,18 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# drop_reason values run_pipeline emits (pipeline.py drop_reason chain),
-# in gate order; "lang_share" covers the language-portion gate,
-# image reasons arrive via image_reason passthrough.
-DEFAULT_REASONS = (
-    "caption_missing",
-    "caption_empty_norm",
-    "caption_too_short",
-    "image_corrupt",
-    "image_truncated",
-    "lang_share",
-    "perplexity",
-)
+from corpusama_spark.pipeline import DROP_REASONS
+
+DEFAULT_REASONS = DROP_REASONS
 
 
 def observe_decisions(

@@ -28,13 +28,15 @@ import pyspark.sql.functions as F
 from corpusama_spark.snapshots import (
     bucket_commit_seq,
     buckets_as_of,
-    commit_eq_delete,
     commit_snapshot,
+    expire_snapshots,
+)
+from corpusama_spark.tableops import (
+    commit_eq_delete,
     commit_to_branch,
     create_branch,
     drop_partitions,
     evolve_spec,
-    expire_snapshots,
     fast_forward,
     live_specs,
     metadata_partitions,

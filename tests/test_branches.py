@@ -7,10 +7,12 @@ import pytest
 from corpusama_spark.snapshots import (
     buckets_as_of,
     commit_snapshot,
+    read_as_of,
+)
+from corpusama_spark.tableops import (
     commit_to_branch,
     create_branch,
     fast_forward,
-    read_as_of,
     read_branch,
 )
 

@@ -58,8 +58,10 @@ def test_multi_key_and_default_compare_cols(spark):
 
 def test_snapshot_changelog_prunes_untouched_buckets(spark, tmp_path):
     from corpusama_spark.snapshots import (
-        _churned_buckets,
         commit_snapshot,
+    )
+    from corpusama_spark.tableops import (
+        _churned_buckets,
         snapshot_changelog,
     )
 

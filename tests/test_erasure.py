@@ -8,8 +8,10 @@ from corpusama_spark.operators.maintenance import (
     rewrite_erased_buckets,
 )
 from corpusama_spark.snapshots import (
-    commit_eq_delete,
     commit_snapshot,
+)
+from corpusama_spark.tableops import (
+    commit_eq_delete,
     read_as_of_mor,
 )
 

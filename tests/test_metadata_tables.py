@@ -2,9 +2,11 @@
 DataFrames over a real commit chain with deletes, tags, and staging."""
 
 from corpusama_spark.snapshots import (
-    commit_eq_delete,
     commit_snapshot,
     commit_staged,
+)
+from corpusama_spark.tableops import (
+    commit_eq_delete,
     create_tag,
     metadata_history,
     metadata_partitions,
@@ -58,9 +60,11 @@ def test_metadata_tables_are_queryable_sql(spark, tmp_path):
 
 def test_fast_count_matches_scan_and_declines_honestly(spark, tmp_path):
     from corpusama_spark.snapshots import (
-        drop_partitions,
         fast_count,
         read_as_of,
+    )
+    from corpusama_spark.tableops import (
+        drop_partitions,
     )
 
     out, snaps = str(tmp_path / "o2"), str(tmp_path / "s2")

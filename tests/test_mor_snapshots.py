@@ -5,9 +5,11 @@ from pyspark.sql import functions as F
 
 from corpusama_spark.snapshots import (
     bucket_commit_seq,
-    commit_eq_delete,
     commit_snapshot,
     read_as_of,
+)
+from corpusama_spark.tableops import (
+    commit_eq_delete,
     read_as_of_mor,
 )
 

@@ -8,9 +8,11 @@ from corpusama_spark.operators.maintenance import orphan_scan, vacuum_orphans
 from corpusama_spark.snapshots import (
     buckets_as_of,
     commit_snapshot,
-    drop_partitions,
     expire_snapshots,
     read_as_of,
+)
+from corpusama_spark.tableops import (
+    drop_partitions,
     storage_live_buckets,
     ttl_plan,
 )

@@ -141,3 +141,26 @@ def test_snb_equivalent_to_lead_window(spark):
             if o is not None:
                 want.add((min(r.doc_id, o), max(r.doc_id, o)))
     assert got == sorted(want)
+
+
+def test_release_frees_every_range_exchange_cache(spark, scattered):
+    """Each helper persists its range-exchanged input; the result owns
+    it, so the caller's release leaves executor storage as it found it
+    (chained helpers: each result owns its own pass)."""
+    from corpusama_spark.plans.caching import release
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    tiles = ranged_ntile(scattered, ["k"], 4)
+    outs = [
+        attach_global_positions(scattered, ["k"]),
+        ranged_cumsum(scattered, ["k"], ["x"]),
+        tiles,
+        ranged_ntile(tiles, ["x", "k"], 3, "tile2"),
+    ]
+    for out in outs:
+        out.collect()
+    assert persisted().size() > before
+    for out in outs:
+        release(out)
+    assert persisted().size() == before

@@ -20,6 +20,8 @@ def test_write_audit_publish(spark, tmp_path):
         commit_staged,
         publish_snapshot,
         read_as_of,
+    )
+    from corpusama_spark.tableops import (
         read_staged,
     )
 
@@ -67,7 +69,8 @@ def test_abandon_refuses_published(spark, tmp_path):
 
 
 def test_incremental_scan(spark, tmp_path):
-    from corpusama_spark.snapshots import commit_snapshot, read_incremental
+    from corpusama_spark.snapshots import commit_snapshot
+    from corpusama_spark.tableops import read_incremental
 
     out, snaps = str(tmp_path / "t"), str(tmp_path / "s")
     ids = []
@@ -81,7 +84,8 @@ def test_incremental_scan(spark, tmp_path):
 
 
 def test_tags_immutable(spark, tmp_path):
-    from corpusama_spark.snapshots import commit_snapshot, create_tag, read_tag
+    from corpusama_spark.snapshots import commit_snapshot
+    from corpusama_spark.tableops import create_tag, read_tag
 
     out, snaps = str(tmp_path / "t"), str(tmp_path / "s")
     _wave(spark, out, 0, 3)

@@ -6,10 +6,12 @@ from pyspark.sql import functions as F
 
 from corpusama_spark.snapshots import (
     commit_snapshot,
+    partition_specs,
+)
+from corpusama_spark.tableops import (
     current_spec,
     evolve_spec,
     live_specs,
-    partition_specs,
     plan_scan_for_key,
     read_with_specs,
     rewrite_spec,

@@ -17,8 +17,10 @@ def _drop_files(spark, df, path, n_files):
 def test_stream_commits_snapshots(spark, tmp_path):
     from corpusama_spark.snapshots import (
         read_as_of,
-        read_incremental,
         snapshots,
+    )
+    from corpusama_spark.tableops import (
+        read_incremental,
     )
     from corpusama_spark.streaming.incremental import stream_filter_snapshots
 

@@ -12,15 +12,17 @@ physically overwritten since.
 import pytest
 
 from corpusama_spark.snapshots import (
-    backfill_column_stats,
     buckets_as_of,
-    column_stats_as_of,
     commit_snapshot,
+    fast_count,
+    read_as_of,
+)
+from corpusama_spark.tableops import (
+    backfill_column_stats,
+    column_stats_as_of,
     compute_column_stats,
     drop_partitions,
-    fast_count,
     plan_scan_for_range,
-    read_as_of,
     read_range,
     rollback,
 )
