@@ -992,8 +992,8 @@ def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_narrow_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle single-branch variant of the flagship plan (the
-    Structured-Streaming shape; value-identical to `flagship`)."""
+    """The flagship plan through its `narrow_decisions` alias (the one
+    zero-shuffle plan; value-identical to `flagship`)."""
     from corpusama_spark.pipeline import narrow_decisions
 
     docs = _t(spark, sf_dir, "documents")

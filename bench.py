@@ -257,20 +257,8 @@ def main() -> None:
     # startup cost that amortizes to zero on a 10^12-row job); steady-state
     # throughput = best of the subsequent runs, which also rides out the
     # sandbox host's noisy-neighbor variance
-    # both physical strategies of the same (value-identical, test-pinned)
-    # decision computation are timed: the two-branch staged plan (text side
-    # repartitioned by image_id) and the zero-shuffle narrow plan (the
-    # streaming shape). The
-    # headline img/s takes the better plan. The winner is INPUT-SIZE
-    # dependent: at 160k rows the two-branch plan wins (~3.8-4.8 s vs
-    # 5-7 s at local[32]) because narrow chains multiple ArrowEvalPython
-    # nodes into one stage — more live Python workers per task slot +
-    # inter-UDF serialization — while staged amortizes one worker fleet
-    # per stage; at 640k+ rows (round-3 scaling runs) narrow wins in both
-    # 4- and 16-core configs (48.2 vs 56.6 s, 14.1 vs 18.8 s): once the
-    # per-worker fixed cost amortizes, skipping the repartition exchange
-    # dominates. On a real cluster the same tradeoff is executor-memory vs
-    # network: measure per deployment, both plans are kept and identical.
+    # `narrow_decisions` is an alias of `run_pipeline`: `flagship_narrow`
+    # keeps its key in the output and reads as a second sample of one plan
     from corpusama_spark.pipeline import narrow_decisions
 
     # 5 trials (1 cold + 4 steady-state): the host's noisy-neighbor swings

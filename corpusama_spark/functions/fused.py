@@ -1,5 +1,7 @@
-"""The fused text-stage UDF: normalize + clean + language-ID + perplexity
-in ONE Arrow exchange.
+"""The fused filter UDFs: normalize + clean + language-ID + perplexity
+in ONE Arrow exchange (``text_stage``), and that text stage plus image
+verify in one exchange (``filter_stage``, the UDF of
+``pipeline.run_pipeline``).
 
 Why one exchange instead of three chained pandas UDFs (prep → lid → ppl):
 each ArrowEvalPython node owns its own Python worker per task, so a chain of
@@ -31,6 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from corpusama_spark.functions.images import VERIFY_SCHEMA, _verify_batch
 from corpusama_spark.functions.langid import (
     DEFAULT_MAX_LANGS,
     DEFAULT_MIN_LEN,
@@ -64,6 +67,62 @@ TEXT_STAGE_SCHEMA = StructType(
     ]
 )
 
+FILTER_STAGE_SCHEMA = StructType(VERIFY_SCHEMA.fields + TEXT_STAGE_SCHEMA.fields)
+
+
+def _text_batch(
+    captions: pd.Series,
+    lid_model,
+    ppl_model,
+    min_len: int,
+    threshold: float,
+    max_langs: int,
+) -> pd.DataFrame:
+    """One Arrow batch of captions → the TEXT_STAGE_SCHEMA columns."""
+    norms: list[str | None] = []
+    lines_col: list[list[str] | None] = []
+    for cap in captions:
+        if not isinstance(cap, str):
+            norms.append(None)
+            lines_col.append(None)
+            continue
+        segs = [normalize_text(line) for line in cap.split("\n")]
+        norms.append("".join(segs))
+        cleaned = []
+        for seg in segs:
+            x = seg.translate(_DROP_TABLE)
+            if x.strip():
+                x = " ".join(x.split())
+                cleaned.append(x.lower() if x.isupper() else x)
+        lines_col.append(cleaned)
+
+    # one model call for the whole Arrow batch
+    unique = sorted(
+        {
+            ln
+            for lines in lines_col
+            if lines
+            for ln in lines
+            if len(ln) >= min_len
+        }
+    )
+    langs, scores = lid_model.predict(unique)
+    preds = dict(zip(unique, zip(langs, scores)))
+    none_lid = (None, None, None, None)
+    lid_rows = []
+    for lines in lines_col:
+        if not lines:
+            lid_rows.append(none_lid)
+            continue
+        res = analyze_lines(lines, lid_model, min_len, threshold, max_langs, preds)
+        lid_rows.append(res if res is not None else none_lid)
+
+    ppl = ppl_model.perplexity_batch(pd.Series(norms))
+    out = pd.DataFrame(lid_rows, columns=["lid_arr", "l1", "l1_size", "multiling"])
+    out.insert(0, "caption_norm", norms)
+    out["ppl"] = ppl
+    return out
+
 
 def text_stage(
     caption_col: Column | str,
@@ -75,55 +134,44 @@ def text_stage(
 
     @F.pandas_udf(TEXT_STAGE_SCHEMA)
     def _udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        lid_model = load_model()
-        ppl_model = get_model()
-        none_lid = (None, None, None, None)
+        lid_model, ppl_model = load_model(), get_model()
         for captions in batches:
-            norms: list[str | None] = []
-            lines_col: list[list[str] | None] = []
-            for cap in captions:
-                if not isinstance(cap, str):
-                    norms.append(None)
-                    lines_col.append(None)
-                    continue
-                segs = [normalize_text(line) for line in cap.split("\n")]
-                norms.append("".join(segs))
-                cleaned = []
-                for seg in segs:
-                    x = seg.translate(_DROP_TABLE)
-                    if x.strip():
-                        x = " ".join(x.split())
-                        cleaned.append(x.lower() if x.isupper() else x)
-                lines_col.append(cleaned)
-
-            # one model call for the whole Arrow batch
-            unique = sorted(
-                {
-                    ln
-                    for lines in lines_col
-                    if lines
-                    for ln in lines
-                    if len(ln) >= min_len
-                }
+            yield _text_batch(
+                captions, lid_model, ppl_model, min_len, threshold, max_langs
             )
-            langs, scores = lid_model.predict(unique)
-            preds = dict(zip(unique, zip(langs, scores)))
-            lid_rows = []
-            for lines in lines_col:
-                if not lines:
-                    lid_rows.append(none_lid)
-                    continue
-                res = analyze_lines(
-                    lines, lid_model, min_len, threshold, max_langs, preds
-                )
-                lid_rows.append(res if res is not None else none_lid)
-
-            ppl = ppl_model.perplexity_batch(pd.Series(norms))
-            out = pd.DataFrame(
-                lid_rows, columns=["lid_arr", "l1", "l1_size", "multiling"]
-            )
-            out.insert(0, "caption_norm", norms)
-            out["ppl"] = ppl
-            yield out
 
     return _udf(F.col(caption_col) if isinstance(caption_col, str) else caption_col)
+
+
+def filter_stage(
+    min_len: int = DEFAULT_MIN_LEN,
+    threshold: float = DEFAULT_THRESHOLD,
+    max_langs: int = DEFAULT_MAX_LANGS,
+) -> Column:
+    """(bytes, fmt, w, h, caption) → struct of FILTER_STAGE_SCHEMA: image
+    verify (images._verify_batch) and the text stage in ONE Arrow UDF.
+
+    Two UDF nodes in one stage would run two Python workers per task
+    slot, each holding its own copy of the batch; one node runs one
+    worker, and the models load once per worker. Built per call, like
+    every UDF here: a UDF object binds the accumulator of the first
+    SparkContext that runs it."""
+
+    @F.pandas_udf(FILTER_STAGE_SCHEMA)
+    def _udf(
+        batches: Iterator[tuple[pd.Series, ...]],
+    ) -> Iterator[pd.DataFrame]:
+        lid_model, ppl_model = load_model(), get_model()
+        for data, fmt, w, h, captions in batches:
+            yield pd.concat(
+                [
+                    _verify_batch(data, fmt, w, h),
+                    _text_batch(
+                        captions, lid_model, ppl_model, min_len, threshold,
+                        max_langs,
+                    ),
+                ],
+                axis=1,
+            )
+
+    return _udf(*(F.col(c) for c in ("bytes", "fmt", "w", "h", "caption")))

@@ -580,13 +580,15 @@ def sorted_neighborhood_pairs(
     property hash blockers need explicit guards for), and every wide op
     is a range/hash exchange that scales with the cluster."""
     from corpusama_spark.operators.prefixsum import attach_global_positions
+    from corpusama_spark.plans.caching import own_caches
 
     keys = [sort_key] + list(passes or [])
-    outs = []
+    outs, positions = [], []
     for i, k in enumerate(keys):
         kc = F.col(k) if isinstance(k, str) else k
         base = docs.select(F.col(id_col).alias("_id"), kc.alias("_snk"))
         pos = attach_global_positions(base, ["_snk", "_id"], pos_col="_gp")
+        positions.append(pos)
         probes = pos.select(
             "_id",
             F.explode(
@@ -610,4 +612,4 @@ def sorted_neighborhood_pairs(
     allp = outs[0]
     for o in outs[1:]:
         allp = allp.unionByName(o)
-    return allp.dropDuplicates(["id_a", "id_b"])
+    return own_caches(allp.dropDuplicates(["id_a", "id_b"]), *positions)

@@ -78,14 +78,18 @@ def zorder_buckets(
     docstring for why the deployment path is repartitionByRange on the
     same key instead of this window."""
     from corpusama_spark.operators.prefixsum import ranged_ntile
+    from corpusama_spark.plans.caching import own_caches
 
     z = zorder_key(k1, k2, bits=bits)
-    return ranged_ntile(
+    tiles = ranged_ntile(
         df.select(F.col(id_col), z),
         [F.asc("zval"), F.asc(F.col(id_col))],
         int(nbuckets),
         "bucket",
-    ).withColumn("bucket", F.col("bucket").cast("long"))
+    )
+    return own_caches(
+        tiles.withColumn("bucket", F.col("bucket").cast("long")), tiles
+    )
 
 
 def rendezvous_score(key: Column, shard: int) -> Column:

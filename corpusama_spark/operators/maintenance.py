@@ -29,7 +29,7 @@ import os
 import pathlib
 import time
 
-from corpusama_spark.snapshots import buckets_as_of
+from corpusama_spark.snapshots import buckets_as_of, snapshots
 
 _BUCKET_PREFIX = "bucket="
 
@@ -48,10 +48,23 @@ def orphan_scan(out_path: str, snap_dir: str) -> dict:
     committed snapshot references (crashed-wave leftovers, abandoned WAP
     stages) plus writer litter (_temporary dirs, .tmp/. staging files).
     Returns a dry-run plan: {live_buckets, orphan_buckets, orphan_files,
-    orphan_bytes, litter}. Never deletes."""
+    orphan_bytes, litter, orphan_deletes}. ``orphan_deletes`` lists the
+    equality-delete files under ``_deletes/eq/`` that no snapshot names
+    (a ``commit_eq_delete`` that lost the id race, or a delete whose
+    snapshot expiry squashed away); ``vacuum_orphans`` leaves them in
+    place. Never deletes."""
     from corpusama_spark.tableops import storage_live_buckets
 
     root = pathlib.Path(out_path)
+    named = {
+        s["eq_delete"]["path"] for s in snapshots(snap_dir) if "eq_delete" in s
+    }
+    eq_dir = root / "_deletes" / "eq"
+    orphan_deletes = sorted(
+        str(f)
+        for f in (eq_dir.iterdir() if eq_dir.is_dir() else ())
+        if f"_deletes/eq/{f.name}" not in named
+    )
     # storage-live, not logically-live: a TTL-dropped bucket stays
     # addressable to pre-drop time travel until snapshot expiry removes
     # the snapshots that reach it — vacuuming earlier would corrupt
@@ -68,6 +81,7 @@ def orphan_scan(out_path: str, snap_dir: str) -> dict:
             "orphan_files": [],
             "orphan_bytes": 0,
             "litter": [],
+            "orphan_deletes": [],
         }
     for child in sorted(root.iterdir()):
         if child.name == "_temporary" or child.name.startswith(".tmp"):
@@ -98,6 +112,7 @@ def orphan_scan(out_path: str, snap_dir: str) -> dict:
         "orphan_files": orphan_files,
         "orphan_bytes": orphan_bytes,
         "litter": litter,
+        "orphan_deletes": orphan_deletes,
     }
 
 

@@ -164,6 +164,7 @@ def t_closeness(
         )
     )
     from corpusama_spark.operators.prefixsum import attach_global_positions
+    from corpusama_spark.plans.caching import own_caches
 
     support = attach_global_positions(
         obs.groupBy("_sv").agg(F.sum("_c").alias("_gc")), ["_sv"], "_rk"
@@ -209,7 +210,7 @@ def t_closeness(
     for nm in names:
         c = per_class[nm].eqNullSafe(nulls[nm])
         cond = c if cond is None else (cond & c)
-    return (
+    out = (
         per_class.join(nulls, cond, "left")
         .drop(*[nulls[nm] for nm in names])
         .select(
@@ -230,6 +231,7 @@ def t_closeness(
         )
         .orderBy(F.desc("t_close"), *names)
     )
+    return own_caches(out, support)
 
 
 def dp_noisy_counts(

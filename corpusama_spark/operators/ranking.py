@@ -142,14 +142,13 @@ def rbo_vocab_rankings(
         )
     )
     from corpusama_spark.operators.prefixsum import attach_global_positions
+    from corpusama_spark.plans.caching import own_caches
 
-    ranked = attach_global_positions(
-        attach_global_positions(
-            counts, [F.desc("freq"), F.asc("tok")], "ra"
-        ),
-        [F.desc("df"), F.asc("tok")],
-        "rb",
-    ).where((F.col("ra") <= k) | (F.col("rb") <= k)).select("tok", "ra", "rb")
+    ra = attach_global_positions(counts, [F.desc("freq"), F.asc("tok")], "ra")
+    rb = attach_global_positions(ra, [F.desc("df"), F.asc("tok")], "rb")
+    ranked = rb.where((F.col("ra") <= k) | (F.col("rb") <= k)).select(
+        "tok", "ra", "rb"
+    )
     both = ranked.where((F.col("ra") <= k) & (F.col("rb") <= k)).select(
         "tok", F.greatest("ra", "rb").alias("enter")
     )
@@ -168,7 +167,7 @@ def rbo_vocab_rankings(
         ).alias("_s"),
         F.max(F.when(F.col("d") == k, F.col("ov"))).alias("_ovk"),
     )
-    return agg.select(
+    out = agg.select(
         F.lit(k).cast("long").alias("k"),
         F.round(F.lit((1.0 - p) / p) * F.col("_s"), 6).alias("rbo"),
         F.col("_ovk").cast("long").alias("overlap_at_k"),
@@ -176,6 +175,7 @@ def rbo_vocab_rankings(
             F.col("_ovk") / (2.0 * k - F.col("_ovk")), 6
         ).alias("jaccard_at_k"),
     )
+    return own_caches(out, ra, rb)
 
 
 def rrf_fuse(

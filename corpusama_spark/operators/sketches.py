@@ -96,13 +96,11 @@ def cms_heavy_hitters(
         F.sum("exact").cast("long").alias("cell")
     )
     from corpusama_spark.operators.prefixsum import attach_global_positions
+    from corpusama_spark.plans.caching import own_caches
 
-    top = (
-        attach_global_positions(
-            vocab, [F.desc("exact"), F.asc("tok")], "rnk"
-        )
-        .withColumn("rnk", F.col("rnk").cast("int"))
-        .where(F.col("rnk") <= k)
+    ranked = attach_global_positions(vocab, [F.desc("exact"), F.asc("tok")], "rnk")
+    top = ranked.withColumn("rnk", F.col("rnk").cast("int")).where(
+        F.col("rnk") <= k
     )
     est = (
         top.select("tok", "exact", "rnk", F.explode(rows).alias("j"))
@@ -131,12 +129,13 @@ def cms_heavy_hitters(
         .groupBy("tok", "exact", "rnk")
         .agg(F.min("cell").cast("long").alias("est"))
     )
-    return est.select(
+    out = est.select(
         "tok",
         "exact",
         "est",
         (F.col("est") - F.col("exact")).cast("long").alias("overestimate"),
     ).orderBy(F.desc("exact"), F.asc("tok"))
+    return own_caches(out, ranked)
 
 
 def hll_distinct(

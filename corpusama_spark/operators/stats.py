@@ -562,25 +562,28 @@ def bh_fdr(
     tie-invariant by the step-up property, but the emitted rank column
     must be deterministic)."""
     from corpusama_spark.operators.prefixsum import attach_global_positions
+    from corpusama_spark.plans.caching import own_caches
 
     m = tests.count()
-    ranked = attach_global_positions(
+    pos = attach_global_positions(
         tests,
         [F.col(p_col).asc()]
         + [F.col(c).asc() for c in (tiebreak_cols or [])],
         "rank",
-    ).withColumn("rank", F.col("rank").cast("int")).withColumn(
+    )
+    ranked = pos.withColumn("rank", F.col("rank").cast("int")).withColumn(
         "crit", F.round(F.col("rank") * F.lit(float(q)) / m, 9)
     )
     kstar = ranked.where(F.col(p_col) <= F.col("crit")).agg(
         F.coalesce(F.max("rank"), F.lit(0)).alias("kstar")
     )
-    return (
+    out = (
         ranked.crossJoin(F.broadcast(kstar))
         .withColumn("reject", F.col("rank") <= F.col("kstar"))
         .drop("kstar")
         .orderBy("rank")
     )
+    return own_caches(out, pos)
 
 
 # two-sided alpha=.05 / power=.80 normal quantiles, pinned as literals so
@@ -670,8 +673,10 @@ def mannwhitney_u(
         F.sum(F.col("is_a").cast("long")).cast("double").alias("t_a"),
     )
     from corpusama_spark.operators.prefixsum import ranged_cumsum
+    from corpusama_spark.plans.caching import own_caches
 
-    ranked = ranged_cumsum(per_v, ["v"], ["t"], exclusive=True).withColumn(
+    cum = ranged_cumsum(per_v, ["v"], ["t"], exclusive=True)
+    ranked = cum.withColumn(
         "midrank", F.col("cum_t") + (F.col("t") + 1) / 2
     )
     agg = ranked.agg(
@@ -691,10 +696,11 @@ def mannwhitney_u(
         * ((n + 1) - F.col("tie_term") / (n * (n - 1)))
     )
     z = F.when(var > 0, (u_a - na * nb / 2) / F.sqrt(var))
-    return agg.select(
+    out = agg.select(
         na.cast("long").alias("n_a"),
         nb.cast("long").alias("n_b"),
         F.round(u_a, 6).alias("u_a"),
         F.round(u_b, 6).alias("u_b"),
         F.round(z, 6).alias("z"),
     )
+    return own_caches(out, cum)

@@ -519,17 +519,20 @@ def heaps_fit(
         new_types, per_doc["id"] == new_types["first_doc"], "left"
     ).select("id", "n_toks", F.coalesce("n_new", F.lit(0)).alias("n_new"))
     from corpusama_spark.operators.prefixsum import ranged_cumsum
+    from corpusama_spark.plans.caching import own_caches
 
-    cum = ranged_cumsum(joined, ["id"], ["n_toks", "n_new"]).select(
+    cum = ranged_cumsum(joined, ["id"], ["n_toks", "n_new"])
+    logs = cum.select(
         F.log(F.col("cum_n_toks")).alias("ln_n"),
         F.log(F.col("cum_n_new")).alias("ln_v"),
     )
-    return cum.agg(
+    out = logs.agg(
         F.round(F.regr_slope(F.col("ln_v"), F.col("ln_n")), 6).alias("beta"),
         F.round(F.regr_intercept(F.col("ln_v"), F.col("ln_n")), 6).alias("ln_k"),
         F.round(F.regr_r2(F.col("ln_v"), F.col("ln_n")), 6).alias("r2"),
         F.count("*").alias("n_checkpoints"),
     )
+    return own_caches(out, cum)
 
 
 def _count_pattern_runs(col: Column, pattern: str) -> Column:
@@ -657,20 +660,18 @@ def oov_rate(
         .agg(F.count("*").cast("long").alias("c"))
     )
     from corpusama_spark.operators.prefixsum import attach_global_positions
+    from corpusama_spark.plans.caching import own_caches
 
-    vocab = (
-        attach_global_positions(
-            gw.groupBy("tok").agg(F.sum("c").cast("long").alias("freq")),
-            [F.desc("freq"), F.asc("tok")],
-            "rnk",
-        )
-        .where(F.col("rnk") <= int(vocab_top))
-        .select("tok")
+    ranked = attach_global_positions(
+        gw.groupBy("tok").agg(F.sum("c").cast("long").alias("freq")),
+        [F.desc("freq"), F.asc("tok")],
+        "rnk",
     )
+    vocab = ranked.where(F.col("rnk") <= int(vocab_top)).select("tok")
     flagged = gw.join(
         F.broadcast(vocab.withColumn("_in", F.lit(1))), "tok", "left"
     )
-    return (
+    out = (
         flagged.groupBy("g")
         .agg(
             F.sum("c").cast("long").alias("n_tokens"),
@@ -695,6 +696,7 @@ def oov_rate(
             ).alias("oov_type_share"),
         )
     )
+    return own_caches(out, ranked)
 
 
 def source_vocab_overlap(

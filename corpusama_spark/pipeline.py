@@ -3,43 +3,32 @@
 Spark-first re-expression of the reference's end-to-end flow
 (rw_corpora_update.py:36-79): ingest → language-ID → attributes → filtered
 export, collapsed into one declarative plan over the captions table.
-``run_pipeline`` is the one entry point for batch, checkpointed and
-streaming jobs; ``choose_plan`` picks the plan from the input alone.
+``run_pipeline`` is the one entry point, and builds the one plan, for
+batch, checkpointed and streaming jobs:
 
-Staged plan (batch inputs): two branches, so the image payload NEVER
-crosses a shuffle:
+    captions ─► filter-stage UDF in the SCAN stage (functions/fused.py:
+                image verify + normalize, clean, lid, ppl — one Arrow
+                pass over (bytes, fmt, w, h, caption))
+             ─► scrub + lid-map exprs ─► keep/drop rule chain (JVM)
 
-    captions ─┬─► image branch: verify UDF in the SCAN stage (narrow);
-              │     output is (image_id, fmt, w, h, ok, reason, psnr) —
-              │     tens of bytes per row
-              └─► text branch: select only (image_id, phash, caption)
-                    ─► repartition(n, image_id)           (≤ ~1 KB/row)
-                    ─► fused text-stage UDF (normalize, clean, lid, ppl:
-                       one Arrow pass) ─► scrub exprs (all narrow)
-    decision = text ⋈ image on image_id — the text side already satisfies
-    the join's hash distribution from its repartition, so only the tiny
-    image-branch output shuffles.
-
-Narrow plan (streaming inputs, ``narrow_decisions``): the same operators
-in the scan stage with no exchange, because a streaming self-join would
-need watermarks. Decision values are identical to the staged plan's.
+No exchange, no join: every operator is narrow, so a streaming input
+needs no watermarks or state store and a checkpoint wave is one Spark
+job (its write).
 
 Scale notes (the 100 TB story):
-- Shuffled bytes ≈ caption text once + the small image-verify table. At
-  10^12 rows with ~100 KB images, shuffling `bytes` would move the whole
-  corpus; this plan moves ~0.1% of it.
+- Bytes never shuffle because nothing shuffles: at 10^12 rows with
+  ~100 KB images the plan reads the corpus once and moves none of it.
 - Language shares need no cross-row state, so language ID runs inside
-  the text-stage UDF (functions/fused.py) rather than as an explode →
-  shuffle → aggregate → join-back plan; the distributed operators stay in
-  functions/langid.py and are pinned value-identical to the kernel.
-- Skew: the repartition hashes image_id, decorrelating caption-length cost
-  from the storage layout (phash buckets), so a flood of one phash still
-  spreads over every partition.
-- The repartition passes an explicit partition COUNT: AQE would coalesce a
-  column-only repartition to its advisory size, serializing the UDF stage.
-- All predicates are JVM expressions: whole-stage codegen end-to-end except
-  the two Arrow UDF exchanges (the text stage on the text branch, verify
-  on the image branch).
+  the fused UDF rather than as an explode → shuffle → aggregate → join-back
+  plan; the distributed operators stay in functions/langid.py and are
+  pinned value-identical to the kernel.
+- Skew: parallelism follows the scan splits, which Spark sizes in bytes
+  (spark.sql.files.maxPartitionBytes), never a key — a flood of one
+  phash bucket lands in as many tasks as its files' splits.
+- One Arrow UDF node, not two: two nodes in one stage would run two
+  Python workers per task slot, each holding its own copy of the batch.
+- All predicates are JVM expressions: whole-stage codegen end-to-end
+  except the one Arrow UDF.
 """
 
 from __future__ import annotations
@@ -51,7 +40,6 @@ from pyspark.sql import functions as F
 
 from corpusama_spark.functions import langid as L
 from corpusama_spark.functions import textrules as T
-from corpusama_spark.functions.images import verify_image
 from corpusama_spark.functions.perplexity import DEFAULT_PPL_THRESHOLD
 from corpusama_spark.functions.scrub import scrub_caption
 
@@ -88,13 +76,12 @@ class FilterConfig:
     max_langs: int = 4
     ppl_threshold: float = DEFAULT_PPL_THRESHOLD
     nbuckets: int = 64
-    num_partitions: int | None = None  # None: 2x defaultParallelism
 
     def rule_version(self) -> str:
         """Deterministic 12-hex version of the DECISION-relevant fields
-        (X251): execution knobs (partitions, bucketing) are
-        EXCLUDED — two configs that keep/drop identically share a
-        version, so changing parallelism never triggers a backfill."""
+        (X251): the execution knob (bucketing) is EXCLUDED — two configs
+        that keep/drop identically share a version, so changing the
+        bucket count never triggers a backfill."""
         import hashlib
 
         decision_fields = (
@@ -127,69 +114,50 @@ def load_config(source: str) -> FilterConfig:
     return FilterConfig(**data)
 
 
-def _n_parts(df: DataFrame, config: FilterConfig) -> int:
-    return config.num_partitions or (
-        2 * df.sparkSession.sparkContext.defaultParallelism
-    )
-
-
 def choose_plan(captions: DataFrame) -> str:
-    """'narrow' for a streaming input, else 'staged'. A streaming frame
-    cannot take the staged plan's self-join without watermarks; a batch
-    frame takes the staged plan, whose text-side exchange balances
-    caption-length skew. Reads no data and no statistics."""
-    return "narrow" if captions.isStreaming else "staged"
+    """Always "narrow", the one plan; kept because filterbench reports it."""
+    return "narrow"
 
 
 def run_pipeline(captions: DataFrame, config: FilterConfig = FilterConfig()) -> DataFrame:
     """captions table → decision table (no bytes column in output)."""
-    if choose_plan(captions) == "narrow":
-        return narrow_decisions(captions, config)
-    image_side = captions.select(
-        "image_id", "fmt", "w", "h", verify_image().alias("_iv")
-    ).select(
-        "image_id",
-        "fmt",
-        "w",
-        "h",
-        F.col("_iv.image_ok").alias("image_ok"),
-        F.col("_iv.image_reason").alias("image_reason"),
-        F.col("_iv.image_psnr").alias("image_psnr"),
+    from corpusama_spark.functions.fused import filter_stage
+
+    scanned = captions.select(
+        "image_id", "fmt", "w", "h", "phash", "caption",
+        filter_stage(
+            min_len=config.min_len,
+            threshold=config.threshold,
+            max_langs=config.max_langs,
+        ).alias("_s"),
     )
-    # hash(image_id) both balances caption-length skew and already
-    # satisfies the final join's required distribution
-    text = captions.select("image_id", "phash", "caption").repartition(
-        _n_parts(captions, config), F.col("image_id")
-    )
-    joined = _apply_text_stage(text, config).join(image_side, "image_id")
-    return _decide(joined, config)
+    return _decide(_derive(scanned), config)
 
 
 def _apply_text_stage(text: DataFrame, config: FilterConfig) -> DataFrame:
-    """One Arrow exchange for the whole text stage (functions/fused.py),
-    plus the JVM-side scrub exprs and lid-map derivation."""
+    """The text stage alone (functions/fused.text_stage) plus the JVM
+    derivations; tests pin it against the distributed langid operators."""
     from corpusama_spark.functions.fused import text_stage
 
-    return (
-        text.withColumn(
-            "_t",
+    return _derive(
+        text.select(
+            "*",
             text_stage(
                 "caption",
                 min_len=config.min_len,
                 threshold=config.threshold,
                 max_langs=config.max_langs,
-            ),
+            ).alias("_s"),
         )
-        .select(
-            "*",
-            F.col("_t.caption_norm").alias("caption_norm"),
-            F.col("_t.lid_arr").alias("lid_arr"),
-            F.col("_t.l1").alias("l1"),
-            F.col("_t.l1_size").alias("l1_size"),
-            F.col("_t.multiling").alias("multiling"),
-            F.col("_t.ppl").alias("ppl"),
-        )
-        .drop("_t")
+    )
+
+
+def _derive(df: DataFrame) -> DataFrame:
+    """Unpack the UDF struct ``_s``, then the JVM-side scrub exprs and
+    lid-map derivation."""
+    return (
+        df.select("*", "_s.*")
+        .drop("_s")
         .withColumn("caption_scrubbed", scrub_caption("caption_norm"))
         .withColumn(
             "lid",
@@ -233,37 +201,8 @@ def _decide(df: DataFrame, config: FilterConfig) -> DataFrame:
     )
 
 
-def narrow_decisions(
-    captions: DataFrame, config: FilterConfig = FilterConfig()
-) -> DataFrame:
-    """Single-branch ZERO-SHUFFLE variant of the filter plan.
-
-    Image verify, the fused text stage, scrub and the rule chain all
-    evaluate in the scan stage — no repartition, no join. ``run_pipeline``
-    takes this plan for streaming inputs (a streaming self-join would need
-    watermarks; a narrow plan needs nothing). Decision values are
-    identical to the staged plan's.
-
-    Batch-plan tradeoff (BENCH.md): both Arrow UDF nodes (verify and the
-    text stage) chain into one stage, and the scan layout decides how
-    caption-length cost is balanced. BENCH.md measured the staged plan
-    faster on fresh sessions and this one faster at many rows per core or
-    in long-lived sessions, with a crossover that moved between hosts;
-    batch jobs take the staged plan so the plan never depends on the
-    session's age or on a row estimate.
-    """
-    with_image = captions.withColumn("_iv", verify_image()).select(
-        "image_id",
-        "fmt",
-        "w",
-        "h",
-        "phash",
-        "caption",
-        F.col("_iv.image_ok").alias("image_ok"),
-        F.col("_iv.image_reason").alias("image_reason"),
-        F.col("_iv.image_psnr").alias("image_psnr"),
-    )
-    return _decide(_apply_text_stage(with_image, config), config)
+# the former streaming-only plan's name; filterbench still times it
+narrow_decisions = run_pipeline
 
 
 def metrics(decisions: DataFrame) -> DataFrame:

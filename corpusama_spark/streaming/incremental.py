@@ -10,11 +10,10 @@ equivalent is Structured Streaming over the input table directory with
   → with an Iceberg catalog, snapshot ids);
 - each trigger processes exactly the files not yet committed, then stops —
   the same "catch up, then exit" shape as the reference's harvest runs;
-- the filter plan is `pipeline.run_pipeline`, which hands a streaming
-  frame to its zero-shuffle narrow plan (`choose_plan`), so the stream
-  needs no watermarks or state store: every micro-batch is embarrassingly
-  parallel and the sink append is idempotent per offset range
-  (exactly-once for the parquet/file sink).
+- the filter plan is `pipeline.run_pipeline`, whose one plan has no
+  exchange, so the stream needs no watermarks or state store: every
+  micro-batch is embarrassingly parallel and the sink append is
+  idempotent per offset range (exactly-once for the parquet/file sink).
 
 A crashed run restarts from the checkpoint and reprocesses at most one
 uncommitted micro-batch — the reference's "can be aborted and restarted
@@ -97,7 +96,8 @@ def stream_filter_snapshots(
     """
     from pyspark.sql import functions as F
 
-    from corpusama_spark.checkpoint import add_bucket
+    from corpusama_spark.checkpoint import _footer_counts, add_bucket
+    from corpusama_spark.plans.metrics import metrics_row, observe_decisions
     from corpusama_spark.snapshots import commit_snapshot, snapshots
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -108,34 +108,30 @@ def stream_filter_snapshots(
         run_id = f"stream-{batch_id}"
         if any(s.get("run_id") == run_id for s in snapshots(snapshot_dir)):
             return  # replayed epoch: already fully committed
+        first = int(batch_id) * config.nbuckets
         bucketed = add_bucket(
             batch_df.withColumn(
                 "phash",
                 F.coalesce(F.col("phash"), F.xxhash64("image_id")),
             ),
             config.nbuckets,
-        ).withColumn(
-            "bucket",
-            (F.lit(int(batch_id)) * config.nbuckets + F.col("bucket")).cast(
-                "int"
-            ),
-        )
-        agg = bucketed.groupBy().agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("keep").cast("long")).alias("k"),
-            F.collect_set("bucket").alias("buckets"),
-        ).collect()[0]
-        if not agg["n"]:
-            return
-        bucketed.write.mode("overwrite").partitionBy("bucket").parquet(
+        ).withColumn("bucket", (F.lit(first) + F.col("bucket")).cast("int"))
+        # the write is the batch's one filter job: its counts ride it as an
+        # observation and its bucket list comes from the footers it wrote
+        observed, obs = observe_decisions(bucketed)
+        observed.write.mode("overwrite").partitionBy("bucket").parquet(
             output_path
         )
+        m = metrics_row(obs)
+        if not m["n_rows"]:
+            return
+        counts = _footer_counts(output_path, range(first, first + config.nbuckets))
         commit_snapshot(
             snapshot_dir,
             run_id,
-            sorted(int(b) for b in agg["buckets"]),
-            int(agg["n"]),
-            int(agg["k"] or 0),
+            sorted(b for b, (rows, _) in counts.items() if rows),
+            int(m["n_rows"]),
+            int(m["n_keep"]),
         )
 
     writer = (

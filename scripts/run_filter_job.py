@@ -9,7 +9,7 @@ Cluster run (north_rule shape):
     spark-submit --master <cluster> --py-files /tmp/corpusama_spark.zip \
         scripts/run_filter_job.py --input s3://.../captions \
         --output /mnt/shared/decisions --manifest /mnt/shared/manifest \
-        --target-lang en --num-partitions 4096
+        --target-lang en
 
 The job is restartable: re-running with the same --manifest resumes at the
 first uncommitted bucket wave (checkpoint.run_checkpointed). This script
@@ -43,7 +43,6 @@ def main() -> None:
     ap.add_argument("--checkpoint", help="stream checkpoint dir (with --stream)")
     ap.add_argument("--target-lang", default=None)
     ap.add_argument("--min-portion", type=float, default=0.8)
-    ap.add_argument("--num-partitions", type=int, default=None)
     ap.add_argument("--nbuckets", type=int, default=64)
     ap.add_argument("--stream", action="store_true", help="incremental drain")
     ap.add_argument(
@@ -67,7 +66,6 @@ def main() -> None:
     config = FilterConfig(
         target_lang=args.target_lang,
         min_portion=args.min_portion,
-        num_partitions=args.num_partitions,
         nbuckets=args.nbuckets,
     )
     run_id = args.run_id or f"run-{uuid.uuid4().hex[:8]}"

@@ -18,7 +18,7 @@ from corpusama_spark.sources.synth import captions_df
 def test_rule_version_semantics():
     a = FilterConfig()
     # execution knobs don't change the version
-    b = FilterConfig(nbuckets=8, num_partitions=3)
+    b = FilterConfig(nbuckets=8)
     assert a.rule_version() == b.rule_version()
     # decision thresholds do
     c = FilterConfig(min_caption_chars=25)

@@ -10,6 +10,7 @@ import pathlib
 import pytest
 
 import corpusama_spark.snapshots as S
+from corpusama_spark.operators.maintenance import orphan_scan
 from corpusama_spark.snapshots import (
     commit_snapshot,
     commit_staged,
@@ -148,3 +149,24 @@ def test_commit_eq_delete_refuses_a_stale_id_without_touching_the_winner(
     path = f"{out}/{doc['eq_delete']['path']}"
     assert _ids(spark.read.parquet(path)) == [2]
     assert _ids(read_as_of_mor(spark, out, d)) == [0, 1, 3, 4, 5, 6, 7]
+
+
+def test_orphan_scan_lists_the_losing_eq_delete_file(spark, tmp_path, monkeypatch):
+    """The delete file of a commit_eq_delete that lost the id race is
+    named by no snapshot: the orphan plan lists it, and only it."""
+    out, d = str(tmp_path / "out"), str(tmp_path / "snaps")
+    _write(spark, out, [(i, "c", 0) for i in range(8)])
+    commit_snapshot(d, "r1", [0], 8, 8)
+    won = commit_eq_delete(_keys(spark, [2]), out, d, "winner")
+    monkeypatch.setattr(S, "latest_snapshot_id", lambda _d: won - 1)
+    with pytest.raises(RuntimeError, match="already committed"):
+        commit_eq_delete(_keys(spark, [5]), out, d, "stale")
+    monkeypatch.undo()
+    eq_dir = pathlib.Path(out) / "_deletes" / "eq"
+    winner = eq_dir / pathlib.Path(snapshots(d)[-1]["eq_delete"]["path"]).name
+    plan = orphan_scan(out, d)
+    assert plan["orphan_deletes"] == [
+        str(f) for f in eq_dir.iterdir() if f != winner
+    ]
+    assert len(plan["orphan_deletes"]) == 1 and winner.exists()
+    assert plan["orphan_buckets"] == []

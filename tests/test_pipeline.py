@@ -277,11 +277,9 @@ def test_scrub_audit_counts_and_chain_order(spark):
     assert all(r.a == r.b for r in both)
 
 def test_choose_plan_follows_input_kind(spark, tmp_path):
-    """The plan depends on the input alone: a batch frame takes the
-    staged plan and a streaming frame the narrow one (a streaming
-    self-join would need watermarks). Choosing reads no data, so it
-    launches no Spark job. Value identity of the two plans is pinned by
-    test_streaming.py::test_narrow_decisions_equal_run_pipeline."""
+    """One plan for every input kind: batch and streaming frames both
+    take the narrow plan, and choosing reads no data, so it launches no
+    Spark job."""
     from corpusama_spark.streaming.incremental import read_caption_stream
 
     caps = captions_df(spark, 300, partitions=4)
@@ -290,7 +288,7 @@ def test_choose_plan_follows_input_kind(spark, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("choose-plan", "choose-plan")
     try:
-        assert choose_plan(caps) == "staged"
+        assert choose_plan(caps) == "narrow"
         assert choose_plan(stream) == "narrow"
         assert run_pipeline(stream).isStreaming
     finally:

@@ -32,14 +32,14 @@ def test_flagship_shuffle_budget(spark, tmp_path):
     path = str(tmp_path / "caps")
     captions_df(spark, 50, partitions=2).write.parquet(path)
     caps = spark.read.parquet(path)
-    # fused plan: text repartition + (at most) the image-side join exchange;
-    # broadcast of the small side may replace the second exchange
+    # one narrow plan: no exchange of any kind
     rep = audit.report(run_pipeline(caps, FilterConfig()))
-    rep.assert_no_row_python().assert_max_shuffles(2)
-    # two Arrow nodes: the FUSED prep+lid+ppl text stage, and image verify —
-    # the fusion is the point (three chained UDF nodes would mean 3x live
-    # Python workers per task slot)
-    assert rep.n_arrow_evals == 2
+    rep.assert_no_row_python().assert_max_shuffles(0)
+    assert rep.n_broadcasts == 0
+    # ONE Arrow node: image verify and the prep+lid+ppl text stage fused —
+    # every extra chained UDF node is one more live Python worker per task
+    # slot, each holding its own copy of the batch
+    assert rep.n_arrow_evals == 1
 
 
 def test_narrow_plan_zero_shuffles(spark, tmp_path):

@@ -164,3 +164,49 @@ def test_release_frees_every_range_exchange_cache(spark, scattered):
     for out in outs:
         release(out)
     assert persisted().size() == before
+
+
+def _operators_on_prefixsum():
+    from corpusama_spark.operators.fuzzy import sorted_neighborhood_pairs
+    from corpusama_spark.operators.layout import zorder_buckets
+    from corpusama_spark.operators.privacy import t_closeness
+    from corpusama_spark.operators.ranking import rbo_vocab_rankings
+    from corpusama_spark.operators.sketches import cms_heavy_hitters
+    from corpusama_spark.operators.stats import bh_fdr, mannwhitney_u
+    from corpusama_spark.operators.textstats import heaps_fit, oov_rate
+
+    return {
+        "rbo_vocab_rankings": lambda d: rbo_vocab_rankings(d, k=5),
+        "bh_fdr": lambda d: bh_fdr(d, "p", tiebreak_cols=["doc_id"]),
+        "mannwhitney_u": lambda d: mannwhitney_u(d, "source", "p", "a", "b"),
+        "heaps_fit": heaps_fit,
+        "oov_rate": lambda d: oov_rate(d, vocab_top=5),
+        "t_closeness": lambda d: t_closeness(d, ["source"], "lang"),
+        "sorted_neighborhood_pairs": lambda d: sorted_neighborhood_pairs(d, "text"),
+        "cms_heavy_hitters": lambda d: cms_heavy_hitters(d, k=5),
+        "zorder_buckets": lambda d: zorder_buckets(
+            d, "doc_id", F.col("doc_id") % 7, F.col("doc_id") % 5, nbuckets=4
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_operators_on_prefixsum()))
+def test_release_frees_caches_of_operators_built_on_prefixsum(spark, name):
+    """An operator whose result derives from a prefixsum pass attaches
+    that pass, so releasing the operator's result frees its cache."""
+    from corpusama_spark.plans.caching import release
+
+    docs = spark.createDataFrame(
+        [
+            (i, f"w{i % 7} w{i % 5} common", "ab"[i % 2], "xyz"[i % 3], (i % 10) / 10)
+            for i in range(50)
+        ],
+        "doc_id long, text string, source string, lang string, p double",
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    out = _operators_on_prefixsum()[name](docs)
+    out.collect()
+    assert persisted().size() > before
+    release(out)
+    assert persisted().size() == before

@@ -3,13 +3,10 @@ pathological key distributions across tasks.
 
 The hazard at 10^12 rows: phash buckets are the storage layout, and a
 boilerplate flood (millions of identical/near-identical images or captions)
-lands one bucket on one task, serializing the UDF stage. run_pipeline's
-text-side exchange hashes image_id, which is unique per row, into an
-explicit partition count — the per-row salt that spreads a single hot
-bucket over every partition.
+could land one bucket on one task if any stage were keyed on phash.
+run_pipeline's plan has no exchange at all, so its parallelism follows
+the input splits (sized in bytes by the scan) and never a key.
 """
-
-import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,31 +15,26 @@ from corpusama_spark.pipeline import FilterConfig, run_pipeline
 from corpusama_spark.sources.synth import captions_df
 
 
-def test_salt_spreads_hot_phash_bucket(spark):
+def test_hot_phash_bucket_runs_in_input_splits(spark):
     # all rows forced into ONE phash bucket — the worst case
     caps = captions_df(spark, 400, partitions=4).withColumn("phash", F.lit(7))
+    decisions = run_pipeline(caps, FilterConfig())
+    plan = decisions._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
     sc = spark.sparkContext
-    sc.setJobGroup("skew-plan", "skew-plan")
+    sc.setJobGroup("skew-run", "skew-run")
     try:
-        plan = (
-            run_pipeline(caps, FilterConfig(num_partitions=16))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        decisions.write.format("noop").mode("overwrite").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # the plan is read, not run
-    assert sc.statusTracker().getJobIdsForGroup("skew-plan") == []
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    # the text side hashes image_id into the explicit count; a column-only
-    # repartition would let AQE coalesce the UDF stage to one task
-    assert any(
-        re.search(r"hashpartitioning\(image_id#\d+, 16\), REPARTITION_BY_NUM", ln)
-        for ln in exchanges
-    ), plan
-    # no exchange keys on the hot storage key
-    assert not any("phash" in ln for ln in exchanges), plan
+    tracker = sc.statusTracker()
+    stages = [
+        s
+        for j in tracker.getJobIdsForGroup("skew-run")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # one stage, one task per input partition: the hot key never matters
+    assert [tracker.getStageInfo(s).numTasks for s in stages] == [4]
 
 
 def test_pipeline_correct_under_pathological_skew(spark):

@@ -88,3 +88,27 @@ def test_replay_is_idempotent(spark, tmp_path):
         map(tuple, read_as_of(spark, out, snap).collect())
     )
     assert before == after
+
+
+def test_one_filter_job_per_microbatch(spark, tmp_path):
+    """The sink's write is the micro-batch's only Spark job: row and keep
+    counts ride it as an observation and the bucket list comes from the
+    footers it wrote, so the filter runs once per micro-batch."""
+    from corpusama_spark.snapshots import snapshots
+    from corpusama_spark.streaming.incremental import stream_filter_snapshots
+
+    inp = str(tmp_path / "in")
+    snap = str(tmp_path / "snap")
+    cfg = FilterConfig(nbuckets=4)
+    _drop_files(spark, captions_df(spark, 100, partitions=2), inp, 2)
+    q = stream_filter_snapshots(
+        spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"), snap, cfg
+    )
+    q.awaitTermination()
+    batches = [p for p in q.recentProgress if p["numInputRows"]]
+    # a streaming query runs every job of its micro-batches in the job
+    # group named by its run id
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(batches) == 1 and len(jobs) == 1, (len(batches), jobs)
+    [s] = snapshots(snap)
+    assert (s["run_id"], s["summary"]["n_rows"]) == ("stream-0", 100)
