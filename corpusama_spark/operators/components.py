@@ -34,10 +34,11 @@ def connected_components(
 ) -> DataFrame:
     """(id, component) with component = min id reachable from the node.
 
-    ``fixed_iters`` runs exactly that many propagation rounds with NO
-    driver-side convergence actions (for plan-only contexts where the
-    graph's diameter is known); otherwise rounds run until a cheap
-    count-of-changes action reports a fixpoint (early-exits almost always).
+    ``fixed_iters`` runs at most that many propagation rounds and tests
+    for a fixpoint only at the eager checkpoints (for contexts where the
+    graph's diameter is known and per-round actions are unwanted);
+    otherwise every round ends with a cheap count-of-changes action that
+    stops at the fixpoint (early-exits almost always).
     ``algorithm="star"`` dispatches to the O(log² n)-round large/small-star
     contraction (connected_components_star) for chain-heavy graphs where
     hash-min's O(diameter) rounds would dominate.
@@ -66,6 +67,12 @@ def connected_components(
         .persist()
     )
     labels_handle = labels
+    # fixed mode runs no action between checkpoints, so every round
+    # persisted since the last one is still lazy. Unpersisting a lazy round
+    # inlines it into the next, where both join sides read it: the plan
+    # doubles per round. Lazy rounds stay cached until a checkpoint has
+    # materialized them, or until the caller releases the result.
+    lazy = [labels]
     rounds = fixed_iters if fixed_iters is not None else max_iters
     for i in range(rounds):
         # min neighbor label per node, one hop
@@ -74,6 +81,8 @@ def connected_components(
             .groupBy("dst")
             .agg(F.min("comp").alias("ncomp"))
         )
+        # labels only fall, so a node changed iff a neighbor label is lower:
+        # the convergence check reads this flag, not a join to the old round
         new_handle = (
             labels.join(prop, labels.id == prop.dst, "left")
             .select(
@@ -81,11 +90,15 @@ def connected_components(
                 F.least(
                     F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
                 ).alias("comp"),
+                F.coalesce(F.col("ncomp") < F.col("comp"), F.lit(False)).alias(
+                    "changed"
+                ),
             )
             .persist()
         )
         new_labels = new_handle
-        if (i + 1) % checkpoint_every == 0:
+        checkpoint = (i + 1) % checkpoint_every == 0
+        if checkpoint:
             # truncate lineage so task retries never replay all rounds;
             # localCheckpoint is eager, so the pre-checkpoint cache can be
             # released right away. Superseded checkpoint BLOCKS are owned by
@@ -95,24 +108,30 @@ def connected_components(
             new_handle.unpersist()
             new_handle = new_labels
         if fixed_iters is None:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.comp") != F.col("o.comp"))
-                .limit(1)
-                .count()
-            )
+            # a full count, not limit(1): it must scan every partition so
+            # the persisted round is whole before the old one is released
+            changed = new_labels.where("changed").count()
             labels_handle.unpersist()
             labels, labels_handle = new_labels, new_handle
             if changed == 0:
                 break
         else:
-            labels_handle.unpersist()
+            if checkpoint:
+                for h in lazy:
+                    h.unpersist()
+                lazy = []
+            lazy.append(new_handle)
             labels, labels_handle = new_labels, new_handle
-    edges.unpersist()
-    return own_caches(
-        labels.select("id", F.col("comp").alias("component")), labels_handle
-    )
+            # the checkpoint has just materialized this round, so reading
+            # its flags is a tiny job; at a fixpoint every later round is a
+            # no-op
+            if checkpoint and new_labels.where("changed").count() == 0:
+                break
+    out = labels.select("id", F.col("comp").alias("component"))
+    if fixed_iters is None or len(lazy) == 1:
+        edges.unpersist()
+        return own_caches(out, labels_handle)
+    return own_caches(out, edges, *lazy)
 
 
 def connected_components_star(
