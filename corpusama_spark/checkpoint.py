@@ -15,47 +15,31 @@ outputs (secondary_pipeline.py:282-287). The Spark equivalent:
   ``num_rows`` and kept rows the ``drop_reason`` null count of the files
   under ``out_path/bucket=<b>/`` (``keep`` is ``drop_reason IS NULL`` by
   construction, pipeline._decide), and their totals must equal the
-  observed counts before the wave is marked done;
-- the wave's manifest rows (bucket, counts, run stamp, rule version — the
-  `_log` analogue) are those verified per-bucket footer counts, zeros for
-  empty buckets, appended as one parquet file by temp write + rename;
-- on restart, buckets already in the manifest are skipped via partition
-  pruning on the bucket column.
+  observed counts before the wave commits;
+- the wave's snapshot commit (snapshots.py) is its one "done" mark, so
+  no second record can run ahead of it: it carries the decision-rule
+  version and the verified per-bucket footer counts (the `_log`
+  analogue), and on restart a bucket is done when its latest visible
+  commit carries the current rule version — a rule change re-runs
+  exactly the stale buckets.
 
-The manifest, the output footers and the snapshot log are read through
-the local filesystem (a shared mount on a cluster), not through Spark.
-With an Iceberg catalog the manifest + overwrite pair collapses into
-snapshot commits; the interface below is format-agnostic on purpose.
+The output footers and the snapshot log are read through the local
+filesystem (a shared mount on a cluster), not through Spark. With an
+Iceberg catalog the overwrite + snapshot pair is one table commit.
 """
 
 from __future__ import annotations
 
-import datetime
-import os
 import pathlib
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from corpusama_spark import snapshots
 from corpusama_spark.pipeline import FilterConfig, run_pipeline
 from corpusama_spark.plans.metrics import metrics_row, observe_decisions
-
-# the columns and types the Spark-written lineage rows always had, so old
-# and new manifest files read together
-MANIFEST_SCHEMA = pa.schema(
-    [
-        ("bucket", pa.int32()),
-        ("n_rows", pa.int64()),
-        ("n_keep", pa.int64()),
-        ("run_id", pa.string()),
-        ("committed_at", pa.timestamp("us", tz="UTC")),
-        ("rule_version", pa.string()),
-    ]
-)
 
 
 def add_bucket(df: DataFrame, nbuckets: int) -> DataFrame:
@@ -78,13 +62,17 @@ def _data_files(directory: pathlib.Path) -> list[pathlib.Path]:
     )
 
 
-def completed_buckets(spark: SparkSession, manifest_path: str) -> set[int]:
-    """Buckets with a manifest row: the ``bucket`` column of every
-    manifest file, read with pyarrow (no Spark job)."""
+def completed_buckets(
+    spark: SparkSession, log_dir: str, config: FilterConfig = FilterConfig()
+) -> set[int]:
+    """Buckets whose latest visible commit in the snapshot log at
+    ``log_dir`` carries ``config``'s rule version, read from the JSON
+    docs (no Spark job)."""
+    cur = config.rule_version()
     return {
         b
-        for f in _data_files(pathlib.Path(manifest_path))
-        for b in pq.read_table(f, columns=["bucket"])["bucket"].to_pylist()
+        for b, st in snapshots.bucket_state(log_dir).items()
+        if st["rule_version"] == cur
     }
 
 
@@ -154,38 +142,94 @@ def _footer_counts(out_path: str, wave: list[int]) -> dict[int, tuple[int, int]]
     return counts
 
 
-def _append_manifest(
-    manifest_path: str,
-    counts: dict[int, tuple[int, int]],
+def _totals(counts: dict[int, tuple[int, int]]) -> tuple[int, int]:
+    return sum(r for r, _ in counts.values()), sum(k for _, k in counts.values())
+
+
+def fold_legacy_manifest(
+    manifest_path: str, log_dir: str, current_version: str
+) -> int:
+    """Fold the parquet manifest table older runs kept at
+    ``manifest_path`` into the log at ``log_dir``, once: only an empty
+    log takes it. Each bucket's latest row (by ``committed_at``; on a
+    same-second tie the row at ``current_version`` wins) is committed,
+    one commit per rule version; rows without one read as ``"legacy"``,
+    which is always stale. Returns the number of buckets folded."""
+    files = _data_files(pathlib.Path(manifest_path))
+    if not files or snapshots.snapshots(log_dir):
+        return 0
+    latest: dict[int, tuple] = {}
+    for f in files:
+        t = pq.read_table(f)
+        stamps = t["committed_at"].cast(pa.timestamp("us")).cast(pa.int64())
+        for row, ts in zip(t.to_pylist(), stamps.to_pylist()):
+            b, v = row["bucket"], row.get("rule_version")
+            key = (ts, v == current_version)
+            if b not in latest or key > latest[b][0]:
+                latest[b] = (key, v, row["n_rows"], row["n_keep"])
+    by_version: dict[str | None, dict[int, tuple[int, int]]] = {}
+    for b, (_, v, r, k) in latest.items():
+        by_version.setdefault(v, {})[b] = (r, k)
+    for v, counts in sorted(by_version.items(), key=lambda kv: str(kv[0])):
+        snapshots.commit_snapshot(
+            log_dir, "manifest-fold", list(counts), *_totals(counts),
+            rule_version=v, bucket_counts=counts,
+        )
+    return len(latest)
+
+
+def commit_wave(
+    log_dir: str,
+    out_path: str,
     run_id: str,
+    wave: list[int],
+    observed: dict,
     rule_version: str,
-) -> None:
-    """Append one manifest file holding a row per bucket of ``counts``:
-    written under a dot-prefixed name every reader skips, then renamed
-    into place, so a crash leaves either no rows or all of them."""
-    d = pathlib.Path(manifest_path)
-    d.mkdir(parents=True, exist_ok=True)
-    bs = sorted(counts)
-    now = datetime.datetime.now(datetime.timezone.utc).replace(microsecond=0)
-    table = pa.table(
-        {
-            "bucket": bs,
-            "n_rows": [counts[b][0] for b in bs],
-            "n_keep": [counts[b][1] for b in bs],
-            "run_id": [run_id] * len(bs),
-            "committed_at": [now] * len(bs),
-            "rule_version": [rule_version] * len(bs),
-        },
-        schema=MANIFEST_SCHEMA,
-    )
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = d / f".{name}"
-    with open(tmp, "wb") as fh:
-        # readers use the parquet schema; an embedded Arrow copy is dead bytes
-        pq.write_table(table, fh, store_schema=False)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.rename(tmp, d / name)
+    wap_audit=None,
+    preview: DataFrame | None = None,
+) -> int:
+    """Verify a written wave and commit it to the snapshot log at
+    ``log_dir``; returns the snapshot id. The one commit path of the
+    checkpointed waves and the stream sink.
+
+    The footers under ``out_path/bucket=<b>/`` of every bucket in
+    ``wave`` must add up to the write's ``observed`` counts
+    (plans/metrics.py), else ``commit verification failed`` raises
+    before anything is committed. A staged snapshot over any of these
+    buckets (left by a crash inside an audit) is abandoned first: the
+    write just replaced its data. The commit records ``rule_version``
+    and the verified per-bucket counts. With ``wap_audit`` the wave
+    commits STAGED, ``wap_audit(observed, preview)`` judges it, and only
+    a passing wave is published; an audit that rejects or raises
+    abandons the staged snapshot, so the wave stays un-committed for
+    re-run and never becomes readable history."""
+    counts = _footer_counts(out_path, wave)
+    footer = _totals(counts)
+    if footer != (observed["n_rows"], observed["n_keep"]):
+        raise RuntimeError(
+            f"commit verification failed for wave {wave}: observed "
+            f"({observed['n_rows']}, {observed['n_keep']}) vs footers {footer}"
+        )
+    for s in snapshots.snapshots(log_dir):
+        if s.get("staged") and set(s["buckets"]) & set(wave):
+            snapshots.abandon_snapshot(log_dir, s["snapshot_id"])
+    record = dict(rule_version=rule_version, bucket_counts=counts)
+    if wap_audit is None:
+        return snapshots.commit_snapshot(log_dir, run_id, wave, *footer, **record)
+    staged = snapshots.commit_staged(log_dir, run_id, wave, *footer, **record)
+    passed = False
+    try:
+        passed = wap_audit(observed, preview)
+    finally:
+        if not passed:
+            snapshots.abandon_snapshot(log_dir, staged)
+    if not passed:
+        raise RuntimeError(
+            f"WAP audit rejected wave {wave}: {observed} — staged "
+            "snapshot abandoned, wave left un-committed for re-run"
+        )
+    snapshots.publish_snapshot(log_dir, staged)
+    return staged
 
 
 def run_checkpointed(
@@ -204,39 +248,33 @@ def run_checkpointed(
     Returns the number of buckets processed this invocation. Each wave
     is one write: the dynamic-partition-overwrite output write is the
     wave's only Spark action, and it observes the wave's row and keep
-    counts. Verification reads the footers of the files that write
-    produced, not the data; a mismatch with the observed counts raises
-    ``commit verification failed`` before the wave is marked done. The
-    wave's manifest rows are then the verified per-bucket footer counts
-    (zeros for empty buckets), so restart skips exactly the verified
-    buckets. ``fail_after_buckets`` injects a crash for restart tests
-    (the reference's abort/restart contract, reliefweb.py:55-56).
+    counts. ``commit_wave`` then verifies the footers of the files that
+    write produced against those counts and commits the wave to the
+    snapshot log, the run's one commit record: restart skips exactly
+    the buckets whose latest commit carries this config's rule version,
+    and ``snapshots.read_as_of`` / ``fast_count`` read the same commits.
+    ``fail_after_buckets`` injects a crash for restart tests (the
+    reference's abort/restart contract, reliefweb.py:55-56).
 
-    With ``snapshot_dir`` each verified wave also commits an atomic
-    snapshot (snapshots.py — the Iceberg commit shape), enabling
-    ``read_as_of`` time travel; restart derives done-ness from the
-    manifest, the snapshot chain is the externally-visible commit log.
+    The log lives at ``snapshot_dir`` when given, else at
+    ``manifest_path``. A manifest table left at ``manifest_path`` by
+    older runs is folded into an empty log first
+    (``fold_legacy_manifest``).
 
-    ``wap_audit`` (X246; requires ``snapshot_dir``, else ``ValueError``
-    before anything is written) turns each wave into
-    a write-audit-publish cycle: the wave commits STAGED (invisible to
-    every reader), ``wap_audit(metrics, written_df) -> bool`` judges it
-    BEFORE the manifest marks the wave done, and only a passing wave is
-    published + recorded. ``written_df`` is a lazy read of the wave's
-    buckets. A rejected wave abandons its staged snapshot and raises —
-    the manifest never saw it, so a restart after fixing the gate re-runs
-    exactly that wave (the write is idempotent). Bad data never becomes
-    readable history OR restart-skippable state.
+    ``wap_audit(metrics, written_df) -> bool`` (X246) gates each wave
+    as a write-audit-publish cycle (``commit_wave``); ``written_df`` is a
+    lazy read of the wave's buckets. A rejected wave raises, and a
+    restart after fixing the gate re-runs exactly that wave (the write
+    is idempotent). Bad data never becomes readable history OR
+    restart-skippable state.
     """
-    if wap_audit is not None and snapshot_dir is None:
-        raise ValueError(
-            "wap_audit needs snapshot_dir: a wave is audited as a staged "
-            "snapshot, so without a snapshot log nothing would be gated"
-        )
+    log = snapshot_dir or manifest_path
+    version = config.rule_version()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     pre_bucketed = "bucket" in captions.columns
     df = add_bucket(captions, config.nbuckets)
-    done = completed_buckets(spark, manifest_path)
+    fold_legacy_manifest(manifest_path, log, version)
+    done = completed_buckets(spark, log, config)
     todo = pending_buckets(df, done, config.nbuckets, pre_bucketed)
     if not todo:
         return 0
@@ -253,40 +291,17 @@ def run_checkpointed(
             "bucket", F.pmod(F.col("phash"), F.lit(config.nbuckets)).cast("int")
         )
         written.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
-        m = metrics_row(obs)
-        counts = _footer_counts(out_path, wave)
-        footer = (
-            sum(r for r, _ in counts.values()),
-            sum(k for _, k in counts.values()),
-        )
-        if footer != (m["n_rows"], m["n_keep"]):
-            raise RuntimeError(
-                f"commit verification failed for wave {wave}: observed "
-                f"({m['n_rows']}, {m['n_keep']}) vs footers {footer}"
-            )
-        staged_id = None
+        preview = None
         if wap_audit is not None:
-            staged_id = snapshots.commit_staged(
-                snapshot_dir, run_id, wave, m["n_rows"], m["n_keep"]
-            )
             preview = (
                 spark.read.schema(written.schema)
                 .parquet(out_path)
                 .where(F.col("bucket").isin(wave))
             )
-            if not wap_audit(m, preview):
-                snapshots.abandon_snapshot(snapshot_dir, staged_id)
-                raise RuntimeError(
-                    f"WAP audit rejected wave {wave}: {m} — staged "
-                    "snapshot abandoned, wave left un-committed for re-run"
-                )
-        _append_manifest(manifest_path, counts, run_id, config.rule_version())
-        if staged_id is not None:
-            snapshots.publish_snapshot(snapshot_dir, staged_id)
-        elif snapshot_dir is not None:
-            snapshots.commit_snapshot(
-                snapshot_dir, run_id, wave, m["n_rows"], m["n_keep"]
-            )
+        commit_wave(
+            log, out_path, run_id, wave, metrics_row(obs), version,
+            wap_audit, preview,
+        )
         processed += len(wave)
         if fail_after_buckets is not None and processed >= fail_after_buckets:
             raise RuntimeError(f"injected failure after {processed} buckets")
@@ -294,98 +309,29 @@ def run_checkpointed(
 
 
 def backfill_plan(
-    spark: SparkSession, manifest_path: str, config: FilterConfig
+    spark: SparkSession, log_dir: str, config: FilterConfig
 ) -> DataFrame:
-    """(bucket, rule_version, committed_at, needs_backfill): each
-    bucket's LATEST lineage row vs the current config's decision-rule
-    version (X251). A rule change (threshold bump, new gate) marks
-    exactly the buckets written under older rules — at 10^12 rows the
-    difference between "recompute 3% of buckets" and "recompute the
-    corpus" is this table. Manifests from before versioned lineage read
-    as 'legacy' (mergeSchema), which is always stale — the honest
-    default for provenance you don't have."""
+    """(bucket, rule_version, snapshot_id, needs_backfill): each
+    bucket's latest commit in the snapshot log (the highest snapshot id)
+    vs the current config's decision-rule version (X251). A rule change
+    (threshold bump, new gate) marks exactly the buckets written under
+    older rules — at 10^12 rows the difference between "recompute 3% of
+    buckets" and "recompute the corpus" is this table. Commits from
+    before versioned lineage read as 'legacy', which is always stale —
+    the honest default for provenance you don't have."""
     cur = config.rule_version()
-    m = (
-        spark.read.option("mergeSchema", "true").parquet(manifest_path)
-        if pathlib.Path(manifest_path).exists()
-        else None
+    rows = [
+        (b, st["rule_version"], st["snapshot_id"], st["rule_version"] != cur)
+        for b, st in sorted(snapshots.bucket_state(log_dir).items())
+    ]
+    return spark.createDataFrame(
+        rows,
+        "bucket int, rule_version string, snapshot_id long, "
+        "needs_backfill boolean",
     )
-    if m is None:
-        return spark.createDataFrame(
-            [],
-            "bucket int, rule_version string, committed_at timestamp, "
-            "needs_backfill boolean",
-        )
-    if "rule_version" not in m.columns:
-        m = m.withColumn("rule_version", F.lit(None).cast("string"))
-    # same-second commits tie under the truncated timestamp: prefer the
-    # current rule version on ties so a just-finished backfill wins
-    w = Window.partitionBy("bucket").orderBy(
-        F.col("committed_at").desc(),
-        (F.coalesce("rule_version", F.lit("legacy")) == cur).desc(),
-    )
-    latest = (
-        m.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select(
-            "bucket",
-            F.coalesce("rule_version", F.lit("legacy")).alias("rule_version"),
-            "committed_at",
-        )
-    )
-    return latest.select(
-        "*", (F.col("rule_version") != cur).alias("needs_backfill")
-    ).orderBy("bucket")
 
 
-def run_backfill(
-    spark: SparkSession,
-    captions: DataFrame,
-    out_path: str,
-    manifest_path: str,
-    config: FilterConfig = FilterConfig(),
-    run_id: str = "backfill-0",
-    snapshot_dir: str | None = None,
-) -> int:
-    """Selective recompute: re-run ONLY the buckets whose latest lineage
-    carries a different decision-rule version (plus any never-done
-    buckets). Data writes are the same idempotent dynamic-partition
-    overwrites as the normal waves; fresh lineage rows supersede the
-    stale ones (latest-wins in backfill_plan and restart alike)."""
-    plan = backfill_plan(spark, manifest_path, config)
-    stale = {r.bucket for r in plan.where(F.col("needs_backfill")).collect()}
-    done_fresh = {
-        r.bucket for r in plan.where(~F.col("needs_backfill")).collect()
-    }
-    if not stale and done_fresh:
-        # nothing stale: defer to the normal restart for never-done work
-        return run_checkpointed(
-            spark, captions, out_path, manifest_path, config,
-            run_id=run_id, snapshot_dir=snapshot_dir,
-        )
-    df = add_bucket(captions, config.nbuckets)
-    todo = sorted(
-        set(range(config.nbuckets)) - done_fresh
-    )
-    if not todo:
-        return 0
-    # reuse the wave loop by presenting a manifest-done set that marks
-    # ONLY fresh buckets as complete: run the stale+pending buckets
-    part = df.where(F.col("bucket").isin([int(b) for b in todo]))
-    n = run_checkpointed(
-        spark,
-        part,
-        out_path,
-        manifest_path + "_backfill_" + config.rule_version(),
-        config,
-        run_id=run_id,
-        snapshot_dir=snapshot_dir,
-    )
-    # fold fresh lineage into the MAIN manifest so future plans see the
-    # new version (the scratch manifest is the wave-restart scope)
-    scratch = manifest_path + "_backfill_" + config.rule_version()
-    if pathlib.Path(scratch).exists():
-        spark.read.parquet(scratch).write.mode("append").parquet(
-            manifest_path
-        )
-    return n
+# Selective recompute (X251): a rule change leaves exactly the buckets
+# ``backfill_plan`` marks stale (plus any never-done ones) pending, so a
+# backfill is a checkpointed run; its fresh commits supersede the stale.
+run_backfill = run_checkpointed

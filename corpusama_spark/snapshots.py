@@ -7,7 +7,10 @@ over the parquet output itself:
 
 - an append-only chain of snapshot JSON files (``snap-<id>.json``) with
   parent pointers — Iceberg's metadata log; each snapshot lists the
-  buckets (partitions) it committed plus summary counts;
+  buckets (partitions) it committed plus summary counts, and a job
+  commit also its decision-rule version and verified per-bucket counts
+  — the job's one commit record, from which ``bucket_state`` answers
+  restart done-ness and backfill plans;
 - ONE commit primitive (Iceberg has one for every operation): ``_append``
   claims the next id and writes the doc through ``_write_doc`` (temp
   file, fsync, then a no-clobber link), so a crashed commit leaves no
@@ -18,7 +21,7 @@ over the parquet output itself:
   horizon (write-audit-publish stages and branch commits are skipped);
 - ``read_as_of`` gives time travel: the output table as of snapshot N is
   a partition-pruned read of exactly the buckets committed by snapshots
-  ≤ N; ``fast_count`` answers COUNT(*) from the summaries.
+  ≤ N; ``fast_count`` answers COUNT(*) from the commit records.
 
 This module holds what the checkpointed job (checkpoint.run_checkpointed),
 the stream sink and the benchmark call, plus expiry. Table-maintenance
@@ -135,6 +138,8 @@ def _data_doc(
     schema: list[dict] | None = None,
     spec_id: int | None = None,
     column_stats: dict | None = None,
+    rule_version: str | None = None,
+    bucket_counts: dict | None = None,
 ) -> dict:
     """The body of a data commit (``commit_snapshot`` documents the
     fields); validates ``schema`` and ``spec_id`` before anything is
@@ -144,6 +149,12 @@ def _data_doc(
         "buckets": sorted(int(b) for b in buckets),
         "summary": {"n_rows": int(n_rows), "n_keep": int(n_keep)},
     }
+    if rule_version is not None:
+        doc["rule_version"] = rule_version
+    if bucket_counts is not None:
+        doc["bucket_counts"] = {
+            str(int(b)): [int(r), int(k)] for b, (r, k) in bucket_counts.items()
+        }
     if schema is not None:
         for c in schema:
             if set(c) != {"name", "type", "default"}:
@@ -173,9 +184,15 @@ def commit_snapshot(
     schema: list[dict] | None = None,
     spec_id: int | None = None,
     column_stats: dict | None = None,
+    rule_version: str | None = None,
+    bucket_counts: dict | None = None,
 ) -> int:
     """Atomically append one snapshot; returns its id. Parent pointer is
     the current latest (None for the first commit).
+
+    ``rule_version`` and ``bucket_counts`` ({bucket: (n_rows, n_keep)})
+    are the per-bucket record of a job commit (checkpoint.commit_wave)
+    that ``bucket_state`` and ``fast_count`` read.
 
     ``spec_id`` (X254, partition-spec evolution): the partition spec
     this snapshot's data files were written under; ``tableops.live_specs``
@@ -194,21 +211,16 @@ def commit_snapshot(
         snap_dir,
         _data_doc(
             snap_dir, run_id, buckets, n_rows, n_keep, schema, spec_id,
-            column_stats,
+            column_stats, rule_version, bucket_counts,
         ),
     )
 
 
 def buckets_as_of(snap_dir: str, snapshot_id: int | None = None) -> set[int]:
     """Union of buckets committed by snapshots ≤ snapshot_id (all when
-    None)."""
-    out: set[int] = set()
-    for s in _visible(snap_dir, snapshot_id):
-        out.update(s["buckets"])
-        # partition drops (X264, the DROP PARTITION / TTL shape) replay
-        # in chain order: a re-add after a drop is live again
-        out.difference_update(s.get("dropped_buckets", []))
-    return out
+    None), with partition drops (X264, the DROP PARTITION / TTL shape)
+    replayed in chain order: a re-add after a drop is live again."""
+    return set(bucket_state(snap_dir, snapshot_id))
 
 
 def schema_as_of(
@@ -303,6 +315,38 @@ def bucket_commit_seq(
     return out
 
 
+def bucket_state(
+    snap_dir: str, snapshot_id: int | None = None
+) -> dict[int, dict]:
+    """bucket -> {"snapshot_id", "rule_version", "counts"} of the visible
+    commit that last wrote each live bucket at the horizon — what
+    restart done-ness and backfill plans read. ``counts`` is [n_rows,
+    n_keep], None when the commit had no per-bucket map; no
+    ``rule_version`` reads as ``"legacy"``. A rollback re-adds a dropped
+    bucket with the state of the commit that wrote it; a squashed base
+    carries its expired range's state in ``bucket_state``."""
+    state: dict[int, dict] = {}
+    gone: dict[int, dict] = {}
+    for s in _visible(snap_dir, snapshot_id):
+        carried = s.get("bucket_state", {})
+        counts = s.get("bucket_counts", {})
+        for b in s["buckets"]:
+            if str(b) in carried:
+                state[b] = carried[str(b)]
+            elif "rollback_to" in s and b in gone:
+                state[b] = gone.pop(b)
+            else:
+                state[b] = {
+                    "snapshot_id": s["snapshot_id"],
+                    "rule_version": s.get("rule_version", "legacy"),
+                    "counts": counts.get(str(b)),
+                }
+        for b in s.get("dropped_buckets", []):
+            if b in state:
+                gone[b] = state.pop(b)
+    return state
+
+
 def expiry_plan(snap_dir: str, keep_last: int = 2) -> dict:
     """What ``expire_snapshots`` would do (X229; the Iceberg
     expire-snapshots maintenance shape): retain the newest ``keep_last``
@@ -335,11 +379,7 @@ def expiry_plan(snap_dir: str, keep_last: int = 2) -> dict:
         }
     # replay adds AND drops over the expired prefix so a TTL drop inside
     # the squashed range stays dropped in the base snapshot
-    acc: set[int] = set()
-    for s in old:
-        acc.update(s["buckets"])
-        acc.difference_update(s.get("dropped_buckets", []))
-    base_buckets = sorted(acc)
+    base_buckets = sorted(buckets_as_of(snap_dir, old[-1]["snapshot_id"]))
     seq = bucket_commit_seq(snap_dir, old[-1]["snapshot_id"])
     for d in [s["snapshot_id"] for s in old if "eq_delete" in s]:
         hit = [b for b in base_buckets if seq[b] < d]
@@ -434,6 +474,12 @@ def expire_snapshots(snap_dir: str, keep_last: int = 2) -> dict:
             stats_state[int(bs)] = v
     if stats_state:
         base["column_stats_state"] = {str(b): v for b, v in stats_state.items()}
+    # restart done-ness, backfill plans and per-bucket fast_count read
+    # the same state before and after the squash
+    base["bucket_state"] = {
+        str(b): st
+        for b, st in bucket_state(snap_dir, plan["expire_ids"][-1]).items()
+    }
     old_schemas = [s["schema"] for s in old if "schema" in s]
     if old_schemas:
         # the schema in effect at the squash horizon — keeps
@@ -479,13 +525,18 @@ def commit_staged(
     n_rows: int,
     n_keep: int,
     schema: list[dict] | None = None,
+    rule_version: str | None = None,
+    bucket_counts: dict | None = None,
 ) -> int:
     """Commit a snapshot in STAGED state (write-audit-publish): it holds
     its id in the chain but ``buckets_as_of``/``read_as_of``/
     ``schema_as_of`` skip it until ``publish_snapshot``. The doc is
     staged from its first byte on disk, so no crash can expose an
     unaudited wave. Audit the wave via ``tableops.read_staged`` first."""
-    doc = _data_doc(snap_dir, run_id, buckets, n_rows, n_keep, schema)
+    doc = _data_doc(
+        snap_dir, run_id, buckets, n_rows, n_keep, schema,
+        rule_version=rule_version, bucket_counts=bucket_counts,
+    )
     return _append(snap_dir, {**doc, "staged": True})
 
 
@@ -521,41 +572,29 @@ def abandon_snapshot(snap_dir: str, snapshot_id: int) -> None:
 def fast_count(snap_dir: str, snapshot_id: int | None = None) -> int | None:
     """Metadata-only row count (X272 — Iceberg answers ``COUNT(*)`` from
     manifest statistics without touching data; this is that parity over
-    the snapshot summaries): sum of ``n_keep`` for every bucket's LAST
-    committing data snapshot at the horizon. Returns None — "cannot
-    answer from metadata, fall back to a scan" — whenever the chain
-    contains anything that invalidates per-bucket additivity below the
-    horizon: an eq-delete snapshot (deletes subtract unknown rows), a
-    squashed base (its per-bucket split is gone), a rollback (it re-adds
-    buckets under a zero summary) or a partially re-committed wave.
-    Honesty over speed: a wrong fast count is strictly worse than a slow
-    one.
-
-    Per-bucket accounting: a re-committed bucket REPLACES its rows
-    (dynamic partition overwrite). Multi-bucket waves record one total,
-    so the walk credits a snapshot's n_keep only while it still owns
-    every bucket it committed, and declines when a later commit or drop
-    took some but not all of them (partial attribution would need
-    per-bucket counts the summary does not carry)."""
+    the commit records): the kept rows of every live bucket at the
+    horizon, each credited from the commit that last wrote it
+    (``bucket_state``; a re-committed bucket REPLACES its rows). Returns
+    None — "fall back to a scan" — when the chain below the horizon
+    holds an eq-delete (deletes subtract unknown rows) or a rollback, or
+    a bucket's count is unknown: its commit recorded one total, not a
+    per-bucket map, and a later commit or drop took some but not all of
+    its buckets (a squashed base has no total to credit). A wrong fast
+    count is strictly worse than a slow one."""
     snaps = list(_visible(snap_dir, snapshot_id))
-    if any(
-        "eq_delete" in s or s.get("squashed") or "rollback_to" in s
-        for s in snaps
-    ):
+    if any("eq_delete" in s or "rollback_to" in s for s in snaps):
         return None
-    owner: dict[int, int] = {}  # bucket -> owning snapshot id
-    for s in snaps:
-        for b in s["buckets"]:
-            owner[b] = s["snapshot_id"]
-        for b in s.get("dropped_buckets", []):
-            owner.pop(b, None)
     total = 0
-    for s in snaps:
-        mine = set(s["buckets"])
-        still_owned = {b for b in mine if owner.get(b) == s["snapshot_id"]}
-        if mine and still_owned == mine:
-            total += int(s["summary"]["n_keep"])
-        elif still_owned:
-            # partially overwritten wave: per-bucket split unknown
+    whole: dict[int, set[int]] = {}  # owner id -> live buckets, no map
+    for b, st in bucket_state(snap_dir, snapshot_id).items():
+        if st["counts"] is None:
+            whole.setdefault(st["snapshot_id"], set()).add(b)
+        else:
+            total += int(st["counts"][1])
+    by_id = {s["snapshot_id"]: s for s in snaps}
+    for sid, live in whole.items():
+        s = by_id.get(sid)
+        if s is None or s.get("squashed") or live != set(s["buckets"]):
             return None
+        total += int(s["summary"]["n_keep"])
     return total

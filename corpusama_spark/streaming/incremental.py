@@ -93,12 +93,18 @@ def stream_filter_snapshots(
     ``stream-<batch_id>`` run_id, so a replay neither duplicates rows
     nor forks history. Within a batch the phash-derived locality of
     add_bucket is preserved modulo the offset.
+
+    Each micro-batch commits through ``checkpoint.commit_wave``, like a
+    checkpoint wave: its footers must match the counts its write
+    observed (a short write raises before any snapshot exists and the
+    replay re-runs the batch), and the commit records the rule version
+    and per-bucket counts of its bucket range.
     """
     from pyspark.sql import functions as F
 
-    from corpusama_spark.checkpoint import _footer_counts, add_bucket
+    from corpusama_spark.checkpoint import add_bucket, commit_wave
     from corpusama_spark.plans.metrics import metrics_row, observe_decisions
-    from corpusama_spark.snapshots import commit_snapshot, snapshots
+    from corpusama_spark.snapshots import snapshots
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     captions = read_caption_stream(spark, input_path)
@@ -117,7 +123,7 @@ def stream_filter_snapshots(
             config.nbuckets,
         ).withColumn("bucket", (F.lit(first) + F.col("bucket")).cast("int"))
         # the write is the batch's one filter job: its counts ride it as an
-        # observation and its bucket list comes from the footers it wrote
+        # observation, and the batch commits like a checkpoint wave
         observed, obs = observe_decisions(bucketed)
         observed.write.mode("overwrite").partitionBy("bucket").parquet(
             output_path
@@ -125,13 +131,10 @@ def stream_filter_snapshots(
         m = metrics_row(obs)
         if not m["n_rows"]:
             return
-        counts = _footer_counts(output_path, range(first, first + config.nbuckets))
-        commit_snapshot(
-            snapshot_dir,
-            run_id,
-            sorted(b for b, (rows, _) in counts.items() if rows),
-            int(m["n_rows"]),
-            int(m["n_keep"]),
+        commit_wave(
+            snapshot_dir, output_path, run_id,
+            list(range(first, first + config.nbuckets)), m,
+            config.rule_version(),
         )
 
     writer = (

@@ -11,12 +11,15 @@ Cluster run (north_rule shape):
         --output /mnt/shared/decisions --manifest /mnt/shared/manifest \
         --target-lang en
 
-The job is restartable: re-running with the same --manifest resumes at the
-first uncommitted bucket wave (checkpoint.run_checkpointed). This script
-reads the output's parquet footers, the manifest and the snapshot log
-through the local filesystem of the machine it runs on, so --output and
---manifest must be paths mounted there (and shared with the executors on
-a cluster).
+The job is restartable: each verified bucket wave is one commit to a
+snapshot log, at --snapshots or else at --manifest, and re-running with
+the same paths resumes at the first uncommitted wave
+(checkpoint.run_checkpointed). A manifest table that older runs left at
+--manifest is folded into an empty log once. This script reads the
+output's parquet footers and the snapshot log through the local
+filesystem of the machine it runs on, so --output, --manifest and
+--snapshots must be paths mounted there (and shared with the executors
+on a cluster).
 Use --stream to drain new files incrementally instead (exactly-once,
 streaming checkpoint).
 """
@@ -39,7 +42,11 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="captions table path")
     ap.add_argument("--output", required=True, help="decisions output path")
-    ap.add_argument("--manifest", required=True, help="lineage/manifest path")
+    ap.add_argument(
+        "--manifest", required=True,
+        help="snapshot-log dir when --snapshots is absent; an older run's "
+        "manifest table found here is folded into the log once",
+    )
     ap.add_argument("--checkpoint", help="stream checkpoint dir (with --stream)")
     ap.add_argument("--target-lang", default=None)
     ap.add_argument("--min-portion", type=float, default=0.8)
@@ -47,20 +54,17 @@ def main() -> None:
     ap.add_argument("--stream", action="store_true", help="incremental drain")
     ap.add_argument(
         "--snapshots", default=None,
-        help="snapshot-log dir: one atomic commit per verified wave "
-        "(snapshots.read_as_of gives time travel)",
+        help="snapshot-log dir (default: --manifest): one atomic commit "
+        "per verified wave (snapshots.read_as_of gives time travel)",
     )
     ap.add_argument("--run-id", default=None)
     ap.add_argument(
         "--wap-keep-rate", default=None, metavar="LO,HI",
-        help="write-audit-publish gate (needs --snapshots): each wave "
-        "commits staged and only publishes if its keep rate lies in "
-        "[LO,HI] — a wave outside the band aborts un-committed for re-run",
+        help="write-audit-publish gate: each wave commits staged and only "
+        "publishes if its keep rate lies in [LO,HI] — a wave outside the "
+        "band aborts un-committed for re-run",
     )
     args = ap.parse_args()
-    if args.wap_keep_rate and not args.snapshots:
-        ap.error("--wap-keep-rate needs --snapshots (waves are audited as "
-                 "staged snapshots)")
 
     spark = get_spark(app_name="corpusama-filter")
     config = FilterConfig(

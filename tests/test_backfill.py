@@ -2,12 +2,13 @@
 execution knobs, plan marks exactly the stale buckets, backfill
 recomputes only those, legacy manifests read as always-stale."""
 
-import time
-
 from pyspark.sql import functions as F
 
 from corpusama_spark.checkpoint import (
+    add_bucket,
     backfill_plan,
+    completed_buckets,
+    fold_legacy_manifest,
     run_backfill,
     run_checkpointed,
 )
@@ -36,14 +37,18 @@ def test_backfill_only_stale_buckets(spark, tmp_path):
     assert plan.where(F.col("needs_backfill")).count() == 0
     assert run_backfill(spark, caps, out, man, cfg1, run_id="nb") == 0
 
-    # rule change: every bucket is stale; backfill recomputes all 4 and
-    # the new plan is clean
-    time.sleep(1.1)  # committed_at has second resolution
+    # rule change: every bucket is stale. Buckets 1 and 2 are recomputed
+    # first (a pre-bucketed slice); the backfill then re-runs exactly the
+    # other two and the new plan is clean
     cfg2 = FilterConfig(nbuckets=4, min_caption_chars=25)
     plan2 = backfill_plan(spark, man, cfg2)
     assert plan2.where(F.col("needs_backfill")).count() == 4
+    part = add_bucket(caps, 4).where(F.col("bucket").isin(1, 2))
+    assert run_backfill(spark, part, out, man, cfg2, run_id="v2a") == 2
+    stale = backfill_plan(spark, man, cfg2).where(F.col("needs_backfill"))
+    assert sorted(r.bucket for r in stale.collect()) == [0, 3]
     n = run_backfill(spark, caps, out, man, cfg2, run_id="v2")
-    assert n == 4
+    assert n == 2
     plan3 = backfill_plan(spark, man, cfg2)
     assert plan3.where(F.col("needs_backfill")).count() == 0
     # decisions actually changed under the stricter rule
@@ -54,14 +59,19 @@ def test_backfill_only_stale_buckets(spark, tmp_path):
 
 
 def test_legacy_manifest_is_always_stale(spark, tmp_path):
-    out, man = str(tmp_path / "out"), str(tmp_path / "man")
-    caps = captions_df(spark, 120, partitions=2)
+    """A manifest table from before versioned lineage has no
+    rule_version column: folded into the snapshot log, its buckets read
+    as 'legacy', which is always stale, and the fold happens once."""
+    log = str(tmp_path / "man")
     cfg = FilterConfig(nbuckets=2)
-    run_checkpointed(spark, caps, out, man, cfg, run_id="v1")
-    # strip the version column to simulate a pre-X251 manifest
-    legacy = spark.read.parquet(man).drop("rule_version")
-    legacy_path = str(tmp_path / "man_legacy")
-    legacy.write.parquet(legacy_path)
-    plan = backfill_plan(spark, legacy_path, cfg)
-    assert plan.count() == 2
-    assert plan.where(F.col("needs_backfill")).count() == 2
+    spark.createDataFrame(
+        [(0, 60, 50, "v0"), (1, 60, 55, "v0")],
+        "bucket int, n_rows long, n_keep long, run_id string",
+    ).withColumn("committed_at", F.current_timestamp()).write.parquet(log)
+    assert fold_legacy_manifest(log, log, cfg.rule_version()) == 2
+    plan = backfill_plan(spark, log, cfg)
+    assert {(r.bucket, r.rule_version, r.needs_backfill) for r in plan.collect()} == {
+        (0, "legacy", True), (1, "legacy", True),
+    }
+    assert completed_buckets(spark, log, cfg) == set()
+    assert fold_legacy_manifest(log, log, cfg.rule_version()) == 0

@@ -1,9 +1,10 @@
 """The checkpoint commit path: a wave is one write, verification reads the
-parquet footers it produced, manifest rows come from the verified counts,
-and a mismatched input layout fails before anything is written."""
+parquet footers it produced, the wave's one snapshot commit records the
+verified counts, and a mismatched input layout fails before anything is
+written."""
 
+import datetime
 import pathlib
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -11,13 +12,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from corpusama_spark import checkpoint
+from corpusama_spark import snapshots as S
 from corpusama_spark.checkpoint import (
+    add_bucket,
     backfill_plan,
     completed_buckets,
     run_checkpointed,
 )
 from corpusama_spark.pipeline import FilterConfig, run_pipeline
-from corpusama_spark.snapshots import fast_count, read_as_of, snapshots
+from corpusama_spark.snapshots import (
+    buckets_as_of,
+    fast_count,
+    read_as_of,
+    snapshots,
+)
 from corpusama_spark.sources.synth import captions_df, write_captions
 
 DECISION = ("image_id", "keep", "drop_reason", "caption_scrubbed")
@@ -40,7 +48,7 @@ def _jobs_in_group(spark, group, fn):
 def test_bucket_layout_mismatch_fails_before_writing(spark, tmp_path):
     """Input written at the default 16 buckets, job configured for 64:
     the restart-time scan sees rows whose bucket is not pmod(phash, 64)
-    and refuses to start — no output, no manifest."""
+    and refuses to start — no output, no snapshot log."""
     src = str(tmp_path / "in")
     write_captions(spark, 200, src)
     out, man = tmp_path / "out", tmp_path / "man"
@@ -100,16 +108,23 @@ def test_wave_launches_no_jobs_beyond_its_write(spark, tmp_path):
     )
     assert len(previews) == 4 and all("bucket" in c for c in previews)
     assert run_jobs == 4, run_jobs
-    # one manifest file per wave, each written through a temp name
-    files = sorted((tmp_path / "man").iterdir())
-    assert len(files) == 4
-    assert all(f.name.startswith("part-") for f in files)
+    # one published snapshot doc per wave, carrying the per-bucket record;
+    # no manifest file is written
+    assert not (tmp_path / "man").exists()
+    chain = snapshots(str(tmp_path / "snaps"))
+    assert len(chain) == 4 and not any(s.get("staged") for s in chain)
+    assert sorted(tmp_path.joinpath("snaps").iterdir()) == [
+        S._snap_path(str(tmp_path / "snaps"), s["snapshot_id"]) for s in chain
+    ]
+    for s in chain:
+        assert s["rule_version"] == cfg.rule_version()
+        assert list(s["bucket_counts"]) == [str(b) for b in s["buckets"]]
 
 
 def test_short_write_fails_verification_then_reruns(spark, tmp_path, monkeypatch):
     """A part file vanishes between the write and verification: the wave
-    raises before any manifest row or snapshot exists for it, and a
-    restart re-runs exactly that wave."""
+    raises before any snapshot exists for it, and a restart re-runs
+    exactly that wave."""
     caps = captions_df(spark, 240, partitions=4)
     cfg = FilterConfig(nbuckets=2)
     out, man, snaps = (
@@ -136,7 +151,7 @@ def test_short_write_fails_verification_then_reruns(spark, tmp_path, monkeypatch
             snapshot_dir=snaps, wap_audit=lambda m, w: True,
         )
     short = set(waves[1])
-    assert completed_buckets(spark, man) == {0, 1} - short
+    assert completed_buckets(spark, snaps) == {0, 1} - short
     chain = snapshots(snaps)
     assert len(chain) == 1 and not chain[0].get("staged")
     assert not short & set(chain[0]["buckets"])
@@ -147,7 +162,7 @@ def test_short_write_fails_verification_then_reruns(spark, tmp_path, monkeypatch
         snapshot_dir=snaps, wap_audit=lambda m, w: True,
     ) == len(short)
     assert set(snapshots(snaps)[-1]["buckets"]) == short
-    assert completed_buckets(spark, man) == {0, 1}
+    assert completed_buckets(spark, snaps) == {0, 1}
     expected = _decisions(run_pipeline(caps, cfg))
     assert _decisions(spark.read.parquet(out)) == expected
     assert _decisions(read_as_of(spark, out, snaps)) == expected
@@ -155,11 +170,22 @@ def test_short_write_fails_verification_then_reruns(spark, tmp_path, monkeypatch
 
 
 def test_manifest_mixes_spark_and_pyarrow_files(spark, tmp_path):
-    """Manifests written before the footer commit path hold Spark-written
-    files, some without rule_version; new waves append pyarrow-written
-    files next to them, and every reader sees one table."""
+    """A manifest table from before the snapshot log was the only commit
+    record mixes Spark-written files (some without rule_version) and
+    pyarrow-written ones. The first run folds it into the empty log
+    once: buckets at the current rule version are skipped, 'legacy' and
+    older-version buckets re-run, and a second run folds nothing."""
     out, man = str(tmp_path / "out"), str(tmp_path / "man")
     cfg = FilterConfig(nbuckets=4)
+    caps = captions_df(spark, 120, partitions=2)
+    # bucket 2 was written and verified under the current rules
+    done = run_pipeline(
+        add_bucket(caps, 4).where(F.col("bucket") == 2), cfg
+    ).withColumn("bucket", F.lit(2))
+    done.write.partitionBy("bucket").parquet(out)
+    n2 = spark.read.parquet(out).count()
+    k2 = spark.read.parquet(out).where("keep").count()
+
     stamp = F.date_trunc("second", F.current_timestamp())
     spark.createDataFrame(
         [(0, 30, 28, "old", "v-old")],
@@ -170,34 +196,103 @@ def test_manifest_mixes_spark_and_pyarrow_files(spark, tmp_path):
         [(1, 30, 29, "older")],
         "bucket int, n_rows long, n_keep long, run_id string",
     ).withColumn("committed_at", stamp).write.mode("append").parquet(man)
-    assert completed_buckets(spark, man) == {0, 1}
+    now = datetime.datetime.now(datetime.timezone.utc)
+    long_ago = datetime.datetime(2020, 1, 1, tzinfo=datetime.timezone.utc)
+    # pyarrow-written rows; bucket 0's current-version row is older than
+    # its Spark-written v-old row, so bucket 0 stays stale
+    pq.write_table(
+        pa.table(
+            {
+                "bucket": pa.array([2, 0], pa.int32()),
+                "n_rows": pa.array([n2, 30], pa.int64()),
+                "n_keep": pa.array([k2, 30], pa.int64()),
+                "run_id": ["new", "ancient"],
+                "committed_at": pa.array(
+                    [now, long_ago], pa.timestamp("us", tz="UTC")
+                ),
+                "rule_version": [cfg.rule_version()] * 2,
+            }
+        ),
+        pathlib.Path(man) / "part-pyarrow.parquet",
+        store_schema=False,
+    )
 
-    caps = captions_df(spark, 120, partitions=2)
-    t0 = int(time.time())
-    assert run_checkpointed(spark, caps, out, man, cfg, "new") == 2
-    assert completed_buckets(spark, man) == {0, 1, 2, 3}
-
-    plan = {r.bucket: r for r in backfill_plan(spark, man, cfg).collect()}
-    assert (plan[0].rule_version, plan[0].needs_backfill) == ("v-old", True)
-    assert (plan[1].rule_version, plan[1].needs_backfill) == ("legacy", True)
-    for b in (2, 3):
-        assert (plan[b].rule_version, plan[b].needs_backfill) == (
-            cfg.rule_version(), False,
-        )
-
-    m = spark.read.option("mergeSchema", "true").parquet(man)
-    assert dict(m.dtypes) == {
-        "bucket": "int", "n_rows": "bigint", "n_keep": "bigint",
-        "run_id": "string", "committed_at": "timestamp",
-        "rule_version": "string",
+    assert run_checkpointed(spark, caps, out, man, cfg, "new") == 3
+    chain = snapshots(man)
+    folded = {
+        s.get("rule_version", "legacy"): s["buckets"]
+        for s in chain
+        if s["run_id"] == "manifest-fold"
     }
-    new = m.where(F.col("run_id") == "new")
-    got = new.agg(
-        F.sum("n_rows"), F.sum("n_keep"),
-        F.min(F.unix_timestamp("committed_at")),
-        F.max(F.unix_timestamp("committed_at")),
-    ).first()
-    written = spark.read.parquet(out).where(F.col("bucket").isin(2, 3))
-    assert got[0] == written.count()
-    assert got[1] == written.where("keep").count()
-    assert t0 <= got[2] <= got[3] <= time.time()
+    assert folded == {"v-old": [0], "legacy": [1], cfg.rule_version(): [2]}
+    assert [s["buckets"] for s in chain[3:]] == [[0], [1], [3]]
+    plan = {r.bucket: r for r in backfill_plan(spark, man, cfg).collect()}
+    assert {b: r.needs_backfill for b, r in plan.items()} == dict.fromkeys(
+        range(4), False
+    )
+    expected = _decisions(run_pipeline(caps, cfg))
+    assert _decisions(read_as_of(spark, out, man)) == expected
+    assert fast_count(man) == sum(1 for r in expected if r[1])
+
+    assert run_checkpointed(spark, caps, out, man, cfg, "again") == 0
+    assert snapshots(man) == chain
+
+
+def test_crash_between_write_and_commit_reruns_the_wave(
+    spark, tmp_path, monkeypatch
+):
+    """The second wave's write lands but its snapshot commit fails: the
+    wave is not done, so the restart re-runs it, and the log, time
+    travel and the metadata count all agree with the pipeline."""
+    caps = captions_df(spark, 200, partitions=4)
+    cfg = FilterConfig(nbuckets=4)
+    out, man, snaps = (
+        str(tmp_path / "out"), str(tmp_path / "man"), str(tmp_path / "snaps")
+    )
+    real = S.commit_snapshot
+    calls = []
+
+    def crash_second(*args, **kwargs):
+        calls.append(args[2])
+        if len(calls) == 2:
+            raise OSError("crash before the commit")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "commit_snapshot", crash_second)
+    with pytest.raises(OSError, match="crash before the commit"):
+        run_checkpointed(spark, caps, out, man, cfg, "r1", snapshot_dir=snaps)
+    assert buckets_as_of(snaps) == set(calls[0])
+    monkeypatch.undo()
+
+    assert run_checkpointed(
+        spark, caps, out, man, cfg, "r2", snapshot_dir=snaps
+    ) == 3
+    assert buckets_as_of(snaps) == set(range(4))
+    expected = _decisions(run_pipeline(caps, cfg))
+    assert _decisions(read_as_of(spark, out, snaps)) == expected
+    assert fast_count(snaps) == sum(1 for r in expected if r[1])
+    assert run_checkpointed(
+        spark, caps, out, man, cfg, "r3", snapshot_dir=snaps
+    ) == 0
+
+
+def test_fast_count_credits_buckets_of_a_partly_dropped_wave(spark, tmp_path):
+    """Waves of two buckets each: dropping one bucket of a wave, or
+    re-writing one bucket of another, leaves a count that per-bucket
+    commit records still answer exactly."""
+    from corpusama_spark.tableops import drop_partitions
+
+    caps = captions_df(spark, 200, partitions=4)
+    cfg = FilterConfig(nbuckets=8)
+    out, log = str(tmp_path / "out"), str(tmp_path / "log")
+    run_checkpointed(spark, caps, out, log, cfg, "r1")
+    assert all(len(s["buckets"]) == 2 for s in snapshots(log))
+    drop_partitions(log, "ttl", [0])
+    kept = read_as_of(spark, out, log).where("keep").count()
+    assert fast_count(log) == kept
+    # re-write bucket 5 alone under another rule version
+    strict = FilterConfig(nbuckets=8, min_caption_chars=25)
+    one = add_bucket(caps, 8).where(F.col("bucket") == 5)
+    assert run_checkpointed(spark, one, out, log, strict, "r2") == 1
+    kept = read_as_of(spark, out, log).where("keep").count()
+    assert fast_count(log) == kept

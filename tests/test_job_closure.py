@@ -15,7 +15,7 @@ JOB = (
     "corpusama_spark.pipeline",
     "corpusama_spark.streaming.incremental",
 )
-MAX_LINES = 3500
+MAX_LINES = 3200
 
 PROBE = f"""
 import importlib, json, sys

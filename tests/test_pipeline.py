@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from corpusama_spark.checkpoint import run_checkpointed
+from corpusama_spark.checkpoint import completed_buckets, run_checkpointed
 from corpusama_spark.functions import langid as L
 from corpusama_spark.functions import scrub as S
 from corpusama_spark.functions import textrules as T
@@ -135,16 +135,15 @@ def test_restart_enumeration_never_scans_derived_buckets(spark):
 
 
 def test_checkpoint_empty_buckets_converge(spark, tmp_path):
-    """Buckets with zero rows still get manifest rows (explicit zero
-    counts), so a rerun is a no-op instead of re-enumerating them forever."""
+    """Buckets with zero rows are still committed (explicit zero counts),
+    so a rerun is a no-op instead of re-enumerating them forever."""
     caps = captions_df(spark, 12, partitions=2)  # 12 rows << 32 buckets
     out_path = str(tmp_path / "out")
     mani = str(tmp_path / "manifest")
     cfg = FilterConfig(nbuckets=32)
     n1 = run_checkpointed(spark, caps, out_path, mani, cfg, "run-1")
     assert n1 == 32
-    done = spark.read.parquet(mani).select("bucket").distinct().count()
-    assert done == 32
+    assert completed_buckets(spark, mani, cfg) == set(range(32))
     assert run_checkpointed(spark, caps, out_path, mani, cfg, "run-2") == 0
     assert spark.read.parquet(out_path).count() == 12
 
@@ -158,7 +157,7 @@ def test_checkpoint_restart(spark, tmp_path):
         run_checkpointed(
             spark, caps, out_path, mani, cfg, "run-1", fail_after_buckets=2
         )
-    done_first = spark.read.parquet(mani).select("bucket").distinct().count()
+    done_first = len(completed_buckets(spark, mani, cfg))
     assert 0 < done_first < 8
     n2 = run_checkpointed(spark, caps, out_path, mani, cfg, "run-2")
     assert n2 == 8 - done_first

@@ -113,3 +113,31 @@ def test_expiry_squash_preserves_restart_and_retained_reads(spark, tmp_path):
     S.commit_snapshot(snap, "run5", buckets=[10], n_rows=1, n_keep=1)
     assert S.latest_snapshot_id(snap) == 6
     assert 10 in S.buckets_as_of(snap)
+
+
+def test_expiry_keeps_restart_done_ness_and_counts(spark, tmp_path):
+    """The squashed base carries each bucket's rule version and counts:
+    a restart after expiry re-runs nothing, and the backfill plan and the
+    metadata count read the same as before the squash."""
+    from corpusama_spark import snapshots as S
+    from corpusama_spark.checkpoint import backfill_plan
+
+    caps = captions_df(spark, 120, partitions=2)
+    out, log = str(tmp_path / "out"), str(tmp_path / "log")
+    cfg = FilterConfig(nbuckets=4)
+    assert run_checkpointed(spark, caps, out, log, cfg, "run-1") == 4
+    plan = sorted(
+        (r.bucket, r.rule_version, r.needs_backfill)
+        for r in backfill_plan(spark, log, cfg).collect()
+    )
+    kept = S.fast_count(log)
+    assert kept == read_as_of(spark, out, log).where("keep").count()
+
+    assert S.expire_snapshots(log, keep_last=1)["expire_ids"] == [1, 2, 3]
+    assert S.snapshots(log)[0]["squashed"]
+    assert run_checkpointed(spark, caps, out, log, cfg, "run-2") == 0
+    assert plan == sorted(
+        (r.bucket, r.rule_version, r.needs_backfill)
+        for r in backfill_plan(spark, log, cfg).collect()
+    )
+    assert S.fast_count(log) == kept

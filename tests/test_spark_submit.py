@@ -1,8 +1,9 @@
 """Real `spark-submit --py-files` execution (north_rule run mode): the
 package travels as a zip, the job script runs from OUTSIDE the repo (so
 the zip is the only way `corpusama_spark` resolves), the checkpointed
-filter completes, and a re-run resumes to a no-op. One subprocess JVM,
-local[4]."""
+filter completes with a keep-rate WAP gate and no --snapshots (the log
+lives at --manifest), and a re-run resumes to a no-op. One subprocess
+JVM, local[4]."""
 
 import os
 import shutil
@@ -71,6 +72,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
         "--manifest", manifest,
         "--nbuckets", "4",
         "--run-id", "submit-e2e",
+        "--wap-keep-rate", "0,1",
     ]
     r = subprocess.run(
         cmd, cwd=str(tmp_path), env=env, capture_output=True, text=True,
@@ -82,8 +84,15 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     decided = spark.read.parquet(out)
     assert decided.count() == n_in
     assert "keep" in decided.columns and "image_id" in decided.columns
+    # every wave was audited, published and committed to the log at
+    # --manifest
+    from corpusama_spark.snapshots import buckets_as_of, snapshots
 
-    # restart: same manifest -> resume finds nothing to do (0 buckets)
+    chain = snapshots(manifest)
+    assert len(chain) == 4 and not any(s.get("staged") for s in chain)
+    assert buckets_as_of(manifest) == {0, 1, 2, 3}
+
+    # restart: same log -> resume finds nothing to do (0 buckets)
     r2 = subprocess.run(
         cmd, cwd=str(tmp_path), env=env, capture_output=True, text=True,
         timeout=420,

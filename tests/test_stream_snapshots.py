@@ -2,8 +2,10 @@
 travel over a live stream's output, replay idempotence, incremental
 scans between stream snapshots."""
 
+import pathlib
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from corpusama_spark.pipeline import FilterConfig
@@ -112,3 +114,39 @@ def test_one_filter_job_per_microbatch(spark, tmp_path):
     assert len(batches) == 1 and len(jobs) == 1, (len(batches), jobs)
     [s] = snapshots(snap)
     assert (s["run_id"], s["summary"]["n_rows"]) == ("stream-0", 100)
+
+
+def test_short_microbatch_write_fails_verification_then_replays_once(
+    spark, tmp_path, monkeypatch
+):
+    """A part file of the micro-batch's write vanishes before the commit:
+    the batch fails footer verification before any snapshot exists, and
+    the replay from the stream checkpoint commits it exactly once."""
+    from corpusama_spark import checkpoint
+    from corpusama_spark.snapshots import read_as_of, snapshots
+    from corpusama_spark.streaming.incremental import stream_filter_snapshots
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    ckpt, snap = str(tmp_path / "ckpt"), str(tmp_path / "snap")
+    cfg = FilterConfig(nbuckets=4)
+    _drop_files(spark, captions_df(spark, 100, partitions=2), inp, 2)
+    real = checkpoint._footer_counts
+
+    def lose_a_file(out_path, wave):
+        next(pathlib.Path(out_path).glob("bucket=*/part-*")).unlink()
+        return real(out_path, wave)
+
+    monkeypatch.setattr(checkpoint, "_footer_counts", lose_a_file)
+    q = stream_filter_snapshots(spark, inp, out, ckpt, snap, cfg)
+    with pytest.raises(Exception, match="commit verification failed"):
+        q.awaitTermination()
+    assert snapshots(snap) == []
+    monkeypatch.undo()
+
+    q = stream_filter_snapshots(spark, inp, out, ckpt, snap, cfg)
+    q.awaitTermination()
+    [s] = snapshots(snap)
+    assert (s["run_id"], s["summary"]["n_rows"]) == ("stream-0", 100)
+    assert s["rule_version"] == cfg.rule_version()
+    assert sum(r for r, _ in s["bucket_counts"].values()) == 100
+    assert read_as_of(spark, out, snap).count() == 100

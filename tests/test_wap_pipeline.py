@@ -1,6 +1,6 @@
 """WAP-gated checkpointed pipeline (X246): passing audits publish, a
-rejected wave stays un-committed (no staged leftovers, not in the
-manifest) and re-runs cleanly after the gate is fixed."""
+rejected wave stays un-committed (no staged leftovers, not restart-done)
+and re-runs cleanly after the gate is fixed."""
 
 import pytest
 
@@ -77,41 +77,63 @@ def test_wap_rejection_leaves_wave_rerunnable(spark, tmp_path):
     assert n_after_fail < 240
 
 
-def test_wap_audit_without_snapshots_fails_before_writing(spark, tmp_path):
-    """An audit gate with no snapshot log to stage into cannot gate
-    anything: the call must refuse before any output or manifest exists
-    instead of committing every wave unaudited."""
+def test_wap_audit_gates_the_log_at_the_manifest_path(spark, tmp_path):
+    """Without snapshot_dir the log lives at the manifest path, so an
+    audit gate still gates: a rejected wave leaves no commit there and
+    nothing readable."""
+    from corpusama_spark.snapshots import read_as_of, snapshots
+
     out, man = str(tmp_path / "out"), str(tmp_path / "man")
     caps = captions_df(spark, 40, partitions=2)
-    with pytest.raises(ValueError, match="snapshot_dir"):
+    with pytest.raises(RuntimeError, match="WAP audit rejected"):
         run_checkpointed(
             spark, caps, out, man, FilterConfig(nbuckets=2),
             run_id="wap-no-log", wap_audit=lambda m, w: False,
         )
-    assert not (tmp_path / "out").exists()
-    assert not (tmp_path / "man").exists()
+    assert (tmp_path / "out").exists()
+    assert snapshots(man) == []
+    assert read_as_of(spark, out, man).count() == 0
 
 
-def test_job_script_rejects_wap_without_snapshots(tmp_path):
-    """scripts/run_filter_job.py --wap-keep-rate needs --snapshots: the
-    argument check fails before a SparkSession starts or a path is
-    touched."""
-    import pathlib
-    import subprocess
-    import sys
-
-    script = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "run_filter_job.py"
-    out = tmp_path / "out"
-    proc = subprocess.run(
-        [
-            sys.executable, str(script),
-            "--input", str(tmp_path / "missing-input"),
-            "--output", str(out),
-            "--manifest", str(tmp_path / "man"),
-            "--wap-keep-rate", "0.1,0.9",
-        ],
-        capture_output=True, text=True, timeout=300,
+def test_raising_audit_leaves_no_staged_snapshot(spark, tmp_path):
+    """An audit that raises abandons its staged snapshot before the error
+    propagates, and a staged leftover of a hard crash is abandoned by the
+    next commit over its buckets, so expiry can still compact the log."""
+    from corpusama_spark.snapshots import (
+        commit_staged,
+        expire_snapshots,
+        snapshots,
     )
-    assert proc.returncode == 2, proc.stderr[-2000:]
-    assert "--snapshots" in proc.stderr
-    assert not out.exists()
+
+    out, man, snap = (
+        str(tmp_path / "out"), str(tmp_path / "man"), str(tmp_path / "snap")
+    )
+    caps = captions_df(spark, 240, partitions=4)
+    cfg = FilterConfig(nbuckets=4)
+    calls = []
+
+    def audit_that_crashes(metrics, written):
+        calls.append(metrics)
+        if len(calls) == 3:
+            raise ZeroDivisionError("audit bug")
+        return True
+
+    with pytest.raises(ZeroDivisionError):
+        run_checkpointed(
+            spark, caps, out, man, cfg, run_id="wap3",
+            snapshot_dir=snap, wap_audit=audit_that_crashes,
+        )
+    chain = snapshots(snap)
+    assert len(chain) == 2 and not any(s.get("staged") for s in chain)
+    assert expire_snapshots(snap, keep_last=1)["expire_ids"] == [1]
+
+    # a hard crash inside the next audit leaves its staged doc behind
+    leftover = commit_staged(snap, "crashed", [3], 0, 0)
+    assert run_checkpointed(
+        spark, caps, out, man, cfg, run_id="wap4",
+        snapshot_dir=snap, wap_audit=lambda m, w: True,
+    ) == 2
+    chain = snapshots(snap)
+    assert leftover not in [s["snapshot_id"] for s in chain]
+    assert not any(s.get("staged") for s in chain)
+    assert expire_snapshots(snap, keep_last=1)["expire_ids"] != []
