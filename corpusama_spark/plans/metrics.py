@@ -4,10 +4,9 @@ The north_rule asks for per-partition lineage + metrics tables. Lineage
 is the per-bucket record of each snapshot commit, verified against the
 output's parquet footers (checkpoint.commit_wave); ``pipeline.metrics``
 is a DataFrame, but a SECOND aggregation pass over the decision table.
-``df.observe`` attaches
-named aggregates to the SAME action that materializes the decisions — the
-metrics ride along with the write, costing one accumulator merge instead
-of a 10^12-row re-scan. That is the difference between "metrics" and
+``df.observe`` attaches named aggregates to the SAME action that
+materializes the decisions — the metrics ride along with the write,
+costing one accumulator merge instead of a 10^12-row re-scan. That is the difference between "metrics" and
 "affordable metrics" at scale: the observed values are exactly what the
 job that just ran saw (no read-back race with concurrent writers either).
 
