@@ -95,6 +95,35 @@ def test_wap_audit_gates_the_log_at_the_manifest_path(spark, tmp_path):
     assert read_as_of(spark, out, man).count() == 0
 
 
+def test_job_script_gates_wap_without_snapshots(spark, tmp_path):
+    """scripts/run_filter_job.py --wap-keep-rate without --snapshots gates
+    the log at --manifest: a keep-rate band no wave can meet fails the job
+    with the audit's error and leaves no commit there."""
+    import pathlib
+    import subprocess
+    import sys
+
+    from corpusama_spark.snapshots import snapshots
+
+    script = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "run_filter_job.py"
+    inp, man = str(tmp_path / "captions"), str(tmp_path / "man")
+    captions_df(spark, 40, partitions=2).write.parquet(inp)
+    proc = subprocess.run(
+        [
+            sys.executable, str(script),
+            "--input", inp,
+            "--output", str(tmp_path / "out"),
+            "--manifest", man,
+            "--nbuckets", "2",
+            "--wap-keep-rate", "2,3",
+        ],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode != 0, proc.stdout[-2000:]
+    assert "WAP audit rejected" in proc.stderr, proc.stderr[-2000:]
+    assert snapshots(man) == []
+
+
 def test_raising_audit_leaves_no_staged_snapshot(spark, tmp_path):
     """An audit that raises abandons its staged snapshot before the error
     propagates, and a staged leftover of a hard crash is abandoned by the
