@@ -63,7 +63,7 @@ def _data_files(directory: pathlib.Path) -> list[pathlib.Path]:
 
 
 def completed_buckets(
-    spark: SparkSession, log_dir: str, config: FilterConfig = FilterConfig()
+    spark: SparkSession, log_dir: str, config: FilterConfig
 ) -> set[int]:
     """Buckets whose latest visible commit in the snapshot log at
     ``log_dir`` carries ``config``'s rule version, read from the JSON
@@ -150,32 +150,39 @@ def fold_legacy_manifest(
     manifest_path: str, log_dir: str, current_version: str
 ) -> int:
     """Fold the parquet manifest table older runs kept at
-    ``manifest_path`` into the log at ``log_dir``, once: only an empty
-    log takes it. Each bucket's latest row (by ``committed_at``; on a
-    same-second tie the row at ``current_version`` wins) is committed,
-    one commit per rule version; rows without one read as ``"legacy"``,
-    which is always stale. Returns the number of buckets folded."""
+    ``manifest_path`` into the log at ``log_dir``, once: while no log
+    doc records a rule version or a bucket state. Each bucket's latest
+    row (by ``committed_at``; on a same-second tie the row at
+    ``current_version`` wins) gives its rule version, ``"legacy"``
+    (always stale) when it has none. An empty log takes the manifest's
+    buckets as committed, with their counts; a log older runs committed
+    to takes only the versions of the buckets it holds, so a row whose
+    commit never landed stays invisible and re-runs. One commit;
+    returns the number of buckets folded."""
     files = _data_files(pathlib.Path(manifest_path))
-    if not files or snapshots.snapshots(log_dir):
+    chain = snapshots.snapshots(log_dir)
+    if not files or any(
+        "rule_version" in s or "bucket_state" in s for s in chain
+    ):
         return 0
     latest: dict[int, tuple] = {}
     for f in files:
         t = pq.read_table(f)
         stamps = t["committed_at"].cast(pa.timestamp("us")).cast(pa.int64())
         for row, ts in zip(t.to_pylist(), stamps.to_pylist()):
-            b, v = row["bucket"], row.get("rule_version")
+            b, v = row["bucket"], row.get("rule_version") or "legacy"
             key = (ts, v == current_version)
             if b not in latest or key > latest[b][0]:
                 latest[b] = (key, v, row["n_rows"], row["n_keep"])
-    by_version: dict[str | None, dict[int, tuple[int, int]]] = {}
-    for b, (_, v, r, k) in latest.items():
-        by_version.setdefault(v, {})[b] = (r, k)
-    for v, counts in sorted(by_version.items(), key=lambda kv: str(kv[0])):
+    live = snapshots.buckets_as_of(log_dir) if chain else set(latest)
+    counts = {} if chain else {b: (r, k) for b, (_, _, r, k) in latest.items()}
+    state = {b: {"rule_version": latest[b][1]} for b in live & set(latest)}
+    if state:
         snapshots.commit_snapshot(
             log_dir, "manifest-fold", list(counts), *_totals(counts),
-            rule_version=v, bucket_counts=counts,
+            bucket_counts=counts, bucket_state=state,
         )
-    return len(latest)
+    return len(state)
 
 
 def commit_wave(
@@ -195,9 +202,7 @@ def commit_wave(
     The footers under ``out_path/bucket=<b>/`` of every bucket in
     ``wave`` must add up to the write's ``observed`` counts
     (plans/metrics.py), else ``commit verification failed`` raises
-    before anything is committed. A staged snapshot over any of these
-    buckets (left by a crash inside an audit) is abandoned first: the
-    write just replaced its data. The commit records ``rule_version``
+    before anything is committed. The commit records ``rule_version``
     and the verified per-bucket counts. With ``wap_audit`` the wave
     commits STAGED, ``wap_audit(observed, preview)`` judges it, and only
     a passing wave is published; an audit that rejects or raises
@@ -210,9 +215,6 @@ def commit_wave(
             f"commit verification failed for wave {wave}: observed "
             f"({observed['n_rows']}, {observed['n_keep']}) vs footers {footer}"
         )
-    for s in snapshots.snapshots(log_dir):
-        if s.get("staged") and set(s["buckets"]) & set(wave):
-            snapshots.abandon_snapshot(log_dir, s["snapshot_id"])
     record = dict(rule_version=rule_version, bucket_counts=counts)
     if wap_audit is None:
         return snapshots.commit_snapshot(log_dir, run_id, wave, *footer, **record)
@@ -258,8 +260,9 @@ def run_checkpointed(
 
     The log lives at ``snapshot_dir`` when given, else at
     ``manifest_path``. A manifest table left at ``manifest_path`` by
-    older runs is folded into an empty log first
-    (``fold_legacy_manifest``).
+    older runs is folded into the log first (``fold_legacy_manifest``),
+    and a staged snapshot a crashed audit left over the pending buckets
+    is abandoned before the first wave.
 
     ``wap_audit(metrics, written_df) -> bool`` (X246) gates each wave
     as a write-audit-publish cycle (``commit_wave``); ``written_df`` is a
@@ -278,6 +281,12 @@ def run_checkpointed(
     todo = pending_buckets(df, done, config.nbuckets, pre_bucketed)
     if not todo:
         return 0
+    # a crash inside an audit leaves its staged snapshot behind; this
+    # run's writes replace its data, and while nothing has committed
+    # since, it is still the latest doc, so abandoning it leaves no hole
+    for s in snapshots.snapshots(log):
+        if s.get("staged") and set(s["buckets"]) & set(todo):
+            snapshots.abandon_snapshot(log, s["snapshot_id"])
 
     # group buckets into waves so a restart loses at most one wave
     wave_size = max(1, len(todo) // 4)
@@ -318,7 +327,9 @@ def backfill_plan(
     older rules — at 10^12 rows the difference between "recompute 3% of
     buckets" and "recompute the corpus" is this table. Commits from
     before versioned lineage read as 'legacy', which is always stale —
-    the honest default for provenance you don't have."""
+    the honest default for provenance you don't have. A backfill is a
+    ``run_checkpointed`` run under the new config: the stale buckets
+    are exactly its pending ones, and its commits supersede them."""
     cur = config.rule_version()
     rows = [
         (b, st["rule_version"], st["snapshot_id"], st["rule_version"] != cur)
@@ -330,8 +341,3 @@ def backfill_plan(
         "needs_backfill boolean",
     )
 
-
-# Selective recompute (X251): a rule change leaves exactly the buckets
-# ``backfill_plan`` marks stale (plus any never-done ones) pending, so a
-# backfill is a checkpointed run; its fresh commits supersede the stale.
-run_backfill = run_checkpointed

@@ -140,6 +140,7 @@ def _data_doc(
     column_stats: dict | None = None,
     rule_version: str | None = None,
     bucket_counts: dict | None = None,
+    bucket_state: dict | None = None,
 ) -> dict:
     """The body of a data commit (``commit_snapshot`` documents the
     fields); validates ``schema`` and ``spec_id`` before anything is
@@ -155,6 +156,8 @@ def _data_doc(
         doc["bucket_counts"] = {
             str(int(b)): [int(r), int(k)] for b, (r, k) in bucket_counts.items()
         }
+    if bucket_state is not None:
+        doc["bucket_state"] = {str(int(b)): st for b, st in bucket_state.items()}
     if schema is not None:
         for c in schema:
             if set(c) != {"name", "type", "default"}:
@@ -186,13 +189,16 @@ def commit_snapshot(
     column_stats: dict | None = None,
     rule_version: str | None = None,
     bucket_counts: dict | None = None,
+    bucket_state: dict | None = None,
 ) -> int:
     """Atomically append one snapshot; returns its id. Parent pointer is
     the current latest (None for the first commit).
 
     ``rule_version`` and ``bucket_counts`` ({bucket: (n_rows, n_keep)})
     are the per-bucket record of a job commit (checkpoint.commit_wave)
-    that ``bucket_state`` and ``fast_count`` read.
+    that ``bucket_state`` and ``fast_count`` read. ``bucket_state``
+    ({bucket: fields}) overrides those fields of live buckets, listed
+    or not (checkpoint.fold_legacy_manifest).
 
     ``spec_id`` (X254, partition-spec evolution): the partition spec
     this snapshot's data files were written under; ``tableops.live_specs``
@@ -211,7 +217,7 @@ def commit_snapshot(
         snap_dir,
         _data_doc(
             snap_dir, run_id, buckets, n_rows, n_keep, schema, spec_id,
-            column_stats, rule_version, bucket_counts,
+            column_stats, rule_version, bucket_counts, bucket_state,
         ),
     )
 
@@ -321,26 +327,29 @@ def bucket_state(
     """bucket -> {"snapshot_id", "rule_version", "counts"} of the visible
     commit that last wrote each live bucket at the horizon — what
     restart done-ness and backfill plans read. ``counts`` is [n_rows,
-    n_keep], None when the commit had no per-bucket map; no
-    ``rule_version`` reads as ``"legacy"``. A rollback re-adds a dropped
-    bucket with the state of the commit that wrote it; a squashed base
-    carries its expired range's state in ``bucket_state``."""
+    n_keep], None when the commit had no per-bucket map. A commit
+    without a ``rule_version`` (erasure and other maintenance rewrites)
+    keeps the bucket's earlier one; a bucket no commit ever versioned
+    reads as ``"legacy"``. A rollback re-adds a dropped bucket with the
+    state of the commit that wrote it; a commit's own ``bucket_state``
+    (a squashed base, a manifest fold) overrides the fields it names."""
     state: dict[int, dict] = {}
     gone: dict[int, dict] = {}
     for s in _visible(snap_dir, snapshot_id):
-        carried = s.get("bucket_state", {})
         counts = s.get("bucket_counts", {})
         for b in s["buckets"]:
-            if str(b) in carried:
-                state[b] = carried[str(b)]
-            elif "rollback_to" in s and b in gone:
+            if "rollback_to" in s and b in gone:
                 state[b] = gone.pop(b)
-            else:
-                state[b] = {
-                    "snapshot_id": s["snapshot_id"],
-                    "rule_version": s.get("rule_version", "legacy"),
-                    "counts": counts.get(str(b)),
-                }
+                continue
+            prior = state.get(b, {"rule_version": "legacy"})
+            state[b] = {
+                "snapshot_id": s["snapshot_id"],
+                "rule_version": s.get("rule_version", prior["rule_version"]),
+                "counts": counts.get(str(b)),
+            }
+        for b, st in s.get("bucket_state", {}).items():
+            if int(b) in state:
+                state[int(b)] = {**state[int(b)], **st}
         for b in s.get("dropped_buckets", []):
             if b in state:
                 gone[b] = state.pop(b)
@@ -475,11 +484,16 @@ def expire_snapshots(snap_dir: str, keep_last: int = 2) -> dict:
     if stats_state:
         base["column_stats_state"] = {str(b): v for b, v in stats_state.items()}
     # restart done-ness, backfill plans and per-bucket fast_count read
-    # the same state before and after the squash
-    base["bucket_state"] = {
+    # the same state before and after the squash; a bucket with neither
+    # a version nor counts reads the same without an entry, and a base
+    # without any leaves a legacy log open to its manifest fold
+    carried = {
         str(b): st
         for b, st in bucket_state(snap_dir, plan["expire_ids"][-1]).items()
+        if st["rule_version"] != "legacy" or st["counts"] is not None
     }
+    if carried:
+        base["bucket_state"] = carried
     old_schemas = [s["schema"] for s in old if "schema" in s]
     if old_schemas:
         # the schema in effect at the squash horizon — keeps

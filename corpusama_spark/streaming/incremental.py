@@ -22,6 +22,8 @@ safely" (reliefweb.py:55-56) with stronger guarantees.
 
 from __future__ import annotations
 
+import pathlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -98,7 +100,7 @@ def stream_filter_snapshots(
     checkpoint wave: its footers must match the counts its write
     observed (a short write raises before any snapshot exists and the
     replay re-runs the batch), and the commit records the rule version
-    and per-bucket counts of its bucket range.
+    and per-bucket counts of the buckets it wrote.
     """
     from pyspark.sql import functions as F
 
@@ -131,10 +133,16 @@ def stream_filter_snapshots(
         m = metrics_row(obs)
         if not m["n_rows"]:
             return
+        # the write made a directory for each bucket it wrote rows to;
+        # empty ones stay out of the commit, and a lost directory still
+        # fails verification as a short write
+        wrote = [
+            b
+            for b in range(first, first + config.nbuckets)
+            if (pathlib.Path(output_path) / f"bucket={b}").is_dir()
+        ]
         commit_wave(
-            snapshot_dir, output_path, run_id,
-            list(range(first, first + config.nbuckets)), m,
-            config.rule_version(),
+            snapshot_dir, output_path, run_id, wrote, m, config.rule_version()
         )
 
     writer = (

@@ -15,7 +15,7 @@ The job is restartable: each verified bucket wave is one commit to a
 snapshot log, at --snapshots or else at --manifest, and re-running with
 the same paths resumes at the first uncommitted wave
 (checkpoint.run_checkpointed). A manifest table that older runs left at
---manifest is folded into an empty log once. This script reads the
+--manifest is folded into the log once. This script reads the
 output's parquet footers and the snapshot log through the local
 filesystem of the machine it runs on, so --output, --manifest and
 --snapshots must be paths mounted there (and shared with the executors

@@ -9,7 +9,6 @@ from corpusama_spark.checkpoint import (
     backfill_plan,
     completed_buckets,
     fold_legacy_manifest,
-    run_backfill,
     run_checkpointed,
 )
 from corpusama_spark.pipeline import FilterConfig
@@ -35,7 +34,7 @@ def test_backfill_only_stale_buckets(spark, tmp_path):
     # same rules: nothing to backfill
     plan = backfill_plan(spark, man, cfg1)
     assert plan.where(F.col("needs_backfill")).count() == 0
-    assert run_backfill(spark, caps, out, man, cfg1, run_id="nb") == 0
+    assert run_checkpointed(spark, caps, out, man, cfg1, run_id="nb") == 0
 
     # rule change: every bucket is stale. Buckets 1 and 2 are recomputed
     # first (a pre-bucketed slice); the backfill then re-runs exactly the
@@ -44,10 +43,10 @@ def test_backfill_only_stale_buckets(spark, tmp_path):
     plan2 = backfill_plan(spark, man, cfg2)
     assert plan2.where(F.col("needs_backfill")).count() == 4
     part = add_bucket(caps, 4).where(F.col("bucket").isin(1, 2))
-    assert run_backfill(spark, part, out, man, cfg2, run_id="v2a") == 2
+    assert run_checkpointed(spark, part, out, man, cfg2, run_id="v2a") == 2
     stale = backfill_plan(spark, man, cfg2).where(F.col("needs_backfill"))
     assert sorted(r.bucket for r in stale.collect()) == [0, 3]
-    n = run_backfill(spark, caps, out, man, cfg2, run_id="v2")
+    n = run_checkpointed(spark, caps, out, man, cfg2, run_id="v2")
     assert n == 2
     plan3 = backfill_plan(spark, man, cfg2)
     assert plan3.where(F.col("needs_backfill")).count() == 0

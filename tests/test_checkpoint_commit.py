@@ -4,6 +4,7 @@ verified counts, and a mismatched input layout fails before anything is
 written."""
 
 import datetime
+import json
 import pathlib
 
 import pyarrow as pa
@@ -66,7 +67,7 @@ def test_matching_bucket_layout_runs(spark, tmp_path):
     out, man = str(tmp_path / "out"), str(tmp_path / "man")
     cfg = FilterConfig(nbuckets=4)
     assert run_checkpointed(spark, spark.read.parquet(src), out, man, cfg) == 4
-    assert completed_buckets(spark, man) == {0, 1, 2, 3}
+    assert completed_buckets(spark, man, cfg) == {0, 1, 2, 3}
     assert spark.read.parquet(out).count() == 120
 
 
@@ -151,7 +152,7 @@ def test_short_write_fails_verification_then_reruns(spark, tmp_path, monkeypatch
             snapshot_dir=snaps, wap_audit=lambda m, w: True,
         )
     short = set(waves[1])
-    assert completed_buckets(spark, snaps) == {0, 1} - short
+    assert completed_buckets(spark, snaps, cfg) == {0, 1} - short
     chain = snapshots(snaps)
     assert len(chain) == 1 and not chain[0].get("staged")
     assert not short & set(chain[0]["buckets"])
@@ -162,7 +163,7 @@ def test_short_write_fails_verification_then_reruns(spark, tmp_path, monkeypatch
         snapshot_dir=snaps, wap_audit=lambda m, w: True,
     ) == len(short)
     assert set(snapshots(snaps)[-1]["buckets"]) == short
-    assert completed_buckets(spark, snaps) == {0, 1}
+    assert completed_buckets(spark, snaps, cfg) == {0, 1}
     expected = _decisions(run_pipeline(caps, cfg))
     assert _decisions(spark.read.parquet(out)) == expected
     assert _decisions(read_as_of(spark, out, snaps)) == expected
@@ -219,13 +220,12 @@ def test_manifest_mixes_spark_and_pyarrow_files(spark, tmp_path):
 
     assert run_checkpointed(spark, caps, out, man, cfg, "new") == 3
     chain = snapshots(man)
-    folded = {
-        s.get("rule_version", "legacy"): s["buckets"]
-        for s in chain
-        if s["run_id"] == "manifest-fold"
+    fold = chain[0]
+    assert (fold["run_id"], fold["buckets"]) == ("manifest-fold", [0, 1, 2])
+    assert {b: st["rule_version"] for b, st in fold["bucket_state"].items()} == {
+        "0": "v-old", "1": "legacy", "2": cfg.rule_version(),
     }
-    assert folded == {"v-old": [0], "legacy": [1], cfg.rule_version(): [2]}
-    assert [s["buckets"] for s in chain[3:]] == [[0], [1], [3]]
+    assert [s["buckets"] for s in chain[1:]] == [[0], [1], [3]]
     plan = {r.bucket: r for r in backfill_plan(spark, man, cfg).collect()}
     assert {b: r.needs_backfill for b, r in plan.items()} == dict.fromkeys(
         range(4), False
@@ -296,3 +296,84 @@ def test_fast_count_credits_buckets_of_a_partly_dropped_wave(spark, tmp_path):
     assert run_checkpointed(spark, one, out, log, strict, "r2") == 1
     kept = read_as_of(spark, out, log).where("keep").count()
     assert fast_count(log) == kept
+
+
+def test_legacy_manifest_folds_onto_an_unversioned_log(spark, tmp_path):
+    """Older runs with a snapshot log kept rule versions in the manifest
+    table only. The fold gives the buckets the log holds their manifest
+    versions, so a restart re-runs none of them; a manifest row whose
+    commit never landed stays invisible and re-runs."""
+    caps = captions_df(spark, 200, partitions=4)
+    cfg = FilterConfig(nbuckets=4)
+    out, man, snaps = (
+        str(tmp_path / "out"), str(tmp_path / "man"), str(tmp_path / "snaps")
+    )
+    assert run_checkpointed(
+        spark, caps, out, man, cfg, "r1", snapshot_dir=snaps
+    ) == 4
+    chain = snapshots(snaps)
+    counts = {
+        int(b): c for s in chain for b, c in s["bucket_counts"].items()
+    }
+    # the older shape: commits without versions or per-bucket counts,
+    # and the last wave's commit never landed
+    for s in chain[:-1]:
+        old = {
+            k: v
+            for k, v in s.items()
+            if k not in ("rule_version", "bucket_counts")
+        }
+        S._snap_path(snaps, s["snapshot_id"]).write_text(json.dumps(old))
+    S._snap_path(snaps, chain[-1]["snapshot_id"]).unlink()
+    spark.createDataFrame(
+        [(b, r, k, "r1", cfg.rule_version()) for b, (r, k) in counts.items()],
+        "bucket int, n_rows long, n_keep long, run_id string, "
+        "rule_version string",
+    ).withColumn("committed_at", F.current_timestamp()).write.parquet(man)
+    assert completed_buckets(spark, snaps, cfg) == set()
+
+    assert run_checkpointed(
+        spark, caps, out, man, cfg, "r2", snapshot_dir=snaps
+    ) == len(chain[-1]["buckets"])
+    assert completed_buckets(spark, snaps, cfg) == set(range(4))
+    expected = _decisions(run_pipeline(caps, cfg))
+    assert _decisions(read_as_of(spark, out, snaps)) == expected
+    assert fast_count(snaps) == sum(1 for r in expected if r[1])
+    after = snapshots(snaps)
+    assert run_checkpointed(
+        spark, caps, out, man, cfg, "r3", snapshot_dir=snaps
+    ) == 0
+    assert snapshots(snaps) == after
+
+
+def test_hard_erasure_keeps_buckets_done(spark, tmp_path):
+    """Hard erasure re-commits the erased buckets without a rule version:
+    they keep the version of the wave that wrote them, so a restart
+    re-runs nothing and the erased rows stay gone."""
+    from corpusama_spark.operators.maintenance import rewrite_erased_buckets
+    from corpusama_spark.tableops import commit_eq_delete, read_as_of_mor
+
+    caps = captions_df(spark, 120, partitions=2)
+    cfg = FilterConfig(nbuckets=4)
+    out, log = str(tmp_path / "out"), str(tmp_path / "log")
+    assert run_checkpointed(spark, caps, out, log, cfg, "r1") == 4
+    erased = [
+        r.image_id
+        for r in read_as_of(spark, out, log)
+        .select("image_id")
+        .orderBy("image_id")
+        .limit(3)
+        .collect()
+    ]
+    commit_eq_delete(
+        spark.createDataFrame([(i,) for i in erased], "image_id string"),
+        out, log, "erase",
+    )
+    assert rewrite_erased_buckets(spark, out, log, "hard-erase")[
+        "rewritten_buckets"
+    ]
+    assert completed_buckets(spark, log, cfg) == set(range(4))
+    assert run_checkpointed(spark, caps, out, log, cfg, "r2") == 0
+    gone = F.col("image_id").isin(erased)
+    assert read_as_of_mor(spark, out, log).where(gone).count() == 0
+    assert spark.read.parquet(out).where(gone).count() == 0

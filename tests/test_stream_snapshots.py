@@ -150,3 +150,21 @@ def test_short_microbatch_write_fails_verification_then_replays_once(
     assert s["rule_version"] == cfg.rule_version()
     assert sum(r for r, _ in s["bucket_counts"].values()) == 100
     assert read_as_of(spark, out, snap).count() == 100
+
+
+def test_stream_commit_lists_only_written_buckets(spark, tmp_path):
+    """A micro-batch smaller than its bucket range commits only the
+    buckets it wrote rows to, each with a non-empty per-bucket count."""
+    from corpusama_spark.snapshots import read_as_of, snapshots
+    from corpusama_spark.streaming.incremental import stream_filter_snapshots
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    ckpt, snap = str(tmp_path / "ckpt"), str(tmp_path / "snap")
+    cfg = FilterConfig(nbuckets=16)
+    _drop_files(spark, captions_df(spark, 3, partitions=1), inp, 1)
+    stream_filter_snapshots(spark, inp, out, ckpt, snap, cfg).awaitTermination()
+    [s] = snapshots(snap)
+    assert 1 <= len(s["buckets"]) <= 3
+    assert list(s["bucket_counts"]) == [str(b) for b in s["buckets"]]
+    assert all(r > 0 for r, _ in s["bucket_counts"].values())
+    assert read_as_of(spark, out, snap).count() == 3

@@ -126,8 +126,10 @@ def test_job_script_gates_wap_without_snapshots(spark, tmp_path):
 
 def test_raising_audit_leaves_no_staged_snapshot(spark, tmp_path):
     """An audit that raises abandons its staged snapshot before the error
-    propagates, and a staged leftover of a hard crash is abandoned by the
-    next commit over its buckets, so expiry can still compact the log."""
+    propagates, and a staged leftover of a hard crash is abandoned when
+    the next run starts over its buckets, while it is still the latest
+    doc: its id is reused, no parent dangles, and expiry can still
+    compact the log."""
     from corpusama_spark.snapshots import (
         commit_staged,
         expire_snapshots,
@@ -163,6 +165,8 @@ def test_raising_audit_leaves_no_staged_snapshot(spark, tmp_path):
         snapshot_dir=snap, wap_audit=lambda m, w: True,
     ) == 2
     chain = snapshots(snap)
-    assert leftover not in [s["snapshot_id"] for s in chain]
+    assert [s["snapshot_id"] for s in chain] == [1, 2, 3, 4]
+    assert leftover == 3 and chain[2]["run_id"] == "wap4"
+    assert [s["parent_id"] for s in chain[1:]] == [1, 2, 3]
     assert not any(s.get("staged") for s in chain)
     assert expire_snapshots(snap, keep_last=1)["expire_ids"] != []
