@@ -2,7 +2,13 @@
 execution knobs, plan marks exactly the stale buckets, backfill
 recomputes only those, legacy manifests read as always-stale."""
 
+import datetime
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+
+from corpusama_spark import snapshots as S
 
 from corpusama_spark.checkpoint import (
     add_bucket,
@@ -74,3 +80,33 @@ def test_legacy_manifest_is_always_stale(spark, tmp_path):
     }
     assert completed_buckets(spark, log, cfg) == set()
     assert fold_legacy_manifest(log, log, cfg.rule_version()) == 0
+
+
+def test_expired_unversioned_log_still_takes_the_manifest_fold(tmp_path):
+    """An older log squashed before its first versioned run records no
+    bucket state in its base, so the manifest's versions still fold onto
+    it, once."""
+    log = tmp_path / "log"
+    for b in range(3):
+        S.commit_snapshot(str(log), "old", [b], 10, 8)
+    assert S.expire_snapshots(str(log), keep_last=1)["expire_ids"] == [1, 2]
+    assert "bucket_state" not in S.snapshots(str(log))[0]
+    now = datetime.datetime.now(datetime.timezone.utc)
+    pq.write_table(
+        pa.table(
+            {
+                "bucket": pa.array([0, 1, 2], pa.int32()),
+                "n_rows": [10] * 3,
+                "n_keep": [8] * 3,
+                "run_id": ["old"] * 3,
+                "committed_at": pa.array([now] * 3, pa.timestamp("us", tz="UTC")),
+                "rule_version": ["v1", "v1", "v0"],
+            }
+        ),
+        log / "part-0.parquet",
+    )
+    assert fold_legacy_manifest(str(log), str(log), "v1") == 3
+    assert {b: st["rule_version"] for b, st in S.bucket_state(str(log)).items()} == {
+        0: "v1", 1: "v1", 2: "v0",
+    }
+    assert fold_legacy_manifest(str(log), str(log), "v1") == 0
