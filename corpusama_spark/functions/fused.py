@@ -7,14 +7,16 @@ Why one exchange instead of three chained pandas UDFs (prep → lid → ppl):
 each ArrowEvalPython node owns its own Python worker per task, so a chain of
 three triples the live Python processes (3 workers × tasks) and serializes
 every intermediate (including the cleaned-lines arrays) through Arrow twice.
-Measured on this box at 640k rows, the chained plan stopped scaling past ~4
-cores (worker oversubscription); the fused plan keeps one worker per task
-and the `lines` arrays never leave Python.
+Measured on a 4-core host at 640k rows, the chained plan stopped scaling
+past ~4 cores (worker oversubscription); the fused plan keeps one worker
+per task and the `lines` arrays never leave Python.
 
-The constituent kernels stay importable and independently tested
-(textrules.prep_caption, langid.lid_struct / analyze_lines,
-perplexity.perplexity); this module only changes WHERE they run, not what
-they compute — pinned by the equivalence tests in tests/test_pipeline.py.
+This module owns no text kernel; ``_text_batch`` only calls them, per Arrow
+batch: ``textrules._prep_batch`` (normalize + clean), ``langid.lid_batch``
+(one ``predict``, then ``analyze_lines`` per caption) and
+``perplexity.BigramLM.perplexity_batch``; ``filter_stage`` adds
+``images._verify_batch``. The equivalence tests in tests/test_pipeline.py
+pin ``run_pipeline``'s language-ID columns to the distributed operators.
 """
 
 from __future__ import annotations
@@ -38,12 +40,11 @@ from corpusama_spark.functions.langid import (
     DEFAULT_MAX_LANGS,
     DEFAULT_MIN_LEN,
     DEFAULT_THRESHOLD,
-    analyze_lines,
+    lid_batch,
     load_model,
 )
-from corpusama_spark.functions.normalize import normalize_text
 from corpusama_spark.functions.perplexity import get_model
-from corpusama_spark.functions.textrules import _DROP_TABLE
+from corpusama_spark.functions.textrules import _prep_batch
 
 TEXT_STAGE_SCHEMA = StructType(
     [
@@ -79,48 +80,10 @@ def _text_batch(
     max_langs: int,
 ) -> pd.DataFrame:
     """One Arrow batch of captions → the TEXT_STAGE_SCHEMA columns."""
-    norms: list[str | None] = []
-    lines_col: list[list[str] | None] = []
-    for cap in captions:
-        if not isinstance(cap, str):
-            norms.append(None)
-            lines_col.append(None)
-            continue
-        segs = [normalize_text(line) for line in cap.split("\n")]
-        norms.append("".join(segs))
-        cleaned = []
-        for seg in segs:
-            x = seg.translate(_DROP_TABLE)
-            if x.strip():
-                x = " ".join(x.split())
-                cleaned.append(x.lower() if x.isupper() else x)
-        lines_col.append(cleaned)
-
-    # one model call for the whole Arrow batch
-    unique = sorted(
-        {
-            ln
-            for lines in lines_col
-            if lines
-            for ln in lines
-            if len(ln) >= min_len
-        }
-    )
-    langs, scores = lid_model.predict(unique)
-    preds = dict(zip(unique, zip(langs, scores)))
-    none_lid = (None, None, None, None)
-    lid_rows = []
-    for lines in lines_col:
-        if not lines:
-            lid_rows.append(none_lid)
-            continue
-        res = analyze_lines(lines, lid_model, min_len, threshold, max_langs, preds)
-        lid_rows.append(res if res is not None else none_lid)
-
-    ppl = ppl_model.perplexity_batch(pd.Series(norms))
-    out = pd.DataFrame(lid_rows, columns=["lid_arr", "l1", "l1_size", "multiling"])
-    out.insert(0, "caption_norm", norms)
-    out["ppl"] = ppl
+    prep = _prep_batch(captions)
+    out = lid_batch(prep["lines"], lid_model, min_len, threshold, max_langs)
+    out.insert(0, "caption_norm", prep["caption_norm"])
+    out["ppl"] = ppl_model.perplexity_batch(prep["caption_norm"])
     return out
 
 

@@ -100,13 +100,6 @@ def verify_image(
     return udf(as_col(bytes_col), as_col(fmt_col), as_col(w_col), as_col(h_col))
 
 
-def verify_images(df: DataFrame) -> DataFrame:
-    """Convenience: append the three verification columns to df."""
-    return df.withColumn("_iv", verify_image()).select(
-        "*", "_iv.image_ok", "_iv.image_reason", "_iv.image_psnr"
-    ).drop("_iv")
-
-
 def sniffed_format(bytes_col: Column | str = "bytes") -> Column:
     """Container format detected from magic bytes — pure JVM scan-stage
     expression (hex + substring folds on the binary column; zero decode,

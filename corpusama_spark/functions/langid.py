@@ -17,10 +17,12 @@ plan. The UDF is SCALAR_ITER so the model loads once per Python worker, not
 per batch (the reference's model-per-process pattern, util/parallel.py:53-72).
 
 Two aggregation surfaces, proven value-identical (tests/test_pipeline.py):
-the distributed plan (explode → label → groupBy partial agg → join, 100%
-JVM-side aggregation) and the default fused plan (`lid_struct`), which folds
-the per-caption analyze() into the same Arrow exchange that carries the
-cleaned lines — zero extra shuffles, since shares need no cross-row state.
+the distributed plan (``explode_lines`` → ``label_lines`` → groupBy
+``aggregate_lid`` → join, 100% JVM-side aggregation), and ``lid_batch``,
+the kernel the filter job's UDF (``fused._text_batch``) calls on each
+Arrow batch: one ``predict`` over the batch's unique lines, then
+``analyze_lines`` per caption — zero shuffles, since shares need no
+cross-row state.
 """
 
 from __future__ import annotations
@@ -32,14 +34,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from corpusama_spark.functions.seedtext import SEED_SENTENCES
 from corpusama_spark.functions.textrules import clean_line
@@ -47,7 +42,6 @@ from corpusama_spark.functions.textrules import clean_line
 DEFAULT_THRESHOLD = 0.6
 DEFAULT_MIN_LEN = 10
 DEFAULT_MAX_LANGS = 4
-DEFAULT_MIN_PORTION = 0.8  # export.py:77
 
 PREDICT_SCHEMA = StructType(
     [
@@ -317,27 +311,6 @@ def aggregate_lid(
     )
 
 
-LID_STRUCT_SCHEMA = StructType(
-    [
-        StructField(
-            "lid_arr",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("lang", StringType(), True),
-                        StructField("share", DoubleType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-        StructField("l1", StringType(), True),
-        StructField("l1_size", DoubleType(), True),
-        StructField("multiling", BooleanType(), True),
-    ]
-)
-
-
 def analyze_lines(
     lines: list[str],
     model,
@@ -353,8 +326,8 @@ def analyze_lines(
     F.bround; threshold uses the capped distinct-label count INCLUDING
     unknown/short; sort share desc then lang asc.
 
-    ``preds`` may carry precomputed line → (lang, score) predictions (the
-    fused UDF batches the model across all captions of an Arrow batch).
+    ``preds`` may carry precomputed line → (lang, score) predictions
+    (``lid_batch`` predicts once across all captions of an Arrow batch).
     """
     if not lines:
         return None
@@ -388,56 +361,37 @@ def analyze_lines(
     return (entries, entries[0][0], entries[0][1], multiling)
 
 
-def lid_struct(
-    lines_col: Column | str,
+def lid_batch(
+    lines_col: pd.Series,
+    model,
     min_len: int = DEFAULT_MIN_LEN,
     threshold: float = DEFAULT_THRESHOLD,
     max_langs: int = DEFAULT_MAX_LANGS,
-) -> Column:
-    """Fused per-caption language ID: lines array → struct(lid_arr, l1,
-    l1_size, multiling) in ONE Arrow exchange.
-
-    The distributed twin (explode_lines → label_lines → aggregate_lid →
-    join) costs two shuffles; language shares need no cross-row state, so
-    fusing the aggregation into the UDF removes both. Captions with NULL /
-    empty line arrays yield an all-NULL struct — identical to the left
-    join's missed-key rows in the distributed plan. Batches still hit the
-    model as one flat list per Arrow batch, so prediction density matches
-    the exploded plan.
-    """
-
-    @F.pandas_udf(LID_STRUCT_SCHEMA)
-    def _udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        model = load_model()
-        none_row = (None, None, None, None)
-        for series in batches:
-            # ONE model call per Arrow batch: unique model-eligible lines
-            # across every caption in the batch, predictions scattered back
-            unique = sorted(
-                {
-                    ln
-                    for lines in series
-                    if lines is not None
-                    for ln in lines
-                    if len(ln) >= min_len
-                }
-            )
-            langs, scores = model.predict(unique)
-            preds = dict(zip(unique, zip(langs, scores)))
-            rows = []
-            for lines in series:
-                if lines is None or len(lines) == 0:
-                    rows.append(none_row)
-                    continue
-                res = analyze_lines(
-                    list(lines), model, min_len, threshold, max_langs, preds
-                )
-                rows.append(res if res is not None else none_row)
-            yield pd.DataFrame(
-                rows, columns=["lid_arr", "l1", "l1_size", "multiling"]
-            )
-
-    return _udf(F.col(lines_col) if isinstance(lines_col, str) else lines_col)
+) -> pd.DataFrame:
+    """One Arrow batch of cleaned-line lists → (lid_arr, l1, l1_size,
+    multiling) per caption, with ONE ``model.predict`` call: the unique
+    model-eligible lines of every caption, predictions scattered back to
+    ``analyze_lines``. A NULL or empty line list yields the all-NULL row
+    — the missed-key rows of the distributed plan's left join."""
+    unique = sorted(
+        {
+            ln
+            for lines in lines_col
+            if lines
+            for ln in lines
+            if len(ln) >= min_len
+        }
+    )
+    langs, scores = model.predict(unique)
+    preds = dict(zip(unique, zip(langs, scores)))
+    none_row = (None, None, None, None)
+    rows = [
+        analyze_lines(lines, model, min_len, threshold, max_langs, preds)
+        if lines
+        else none_row
+        for lines in lines_col
+    ]
+    return pd.DataFrame(rows, columns=["lid_arr", "l1", "l1_size", "multiling"])
 
 
 def lid_share(lid_col: Column | str, lang: str) -> Column:

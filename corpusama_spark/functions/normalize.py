@@ -20,7 +20,7 @@ Two execution surfaces:
   batches — the engine's only Python on the text hot path, as NFKC and the
   stdlib charref tables have no Spark builtin.
 - ``normalize_caption()``: SCALAR pandas_udf Column for DataFrame plans.
-- ``fold_quotes_dashes_col()`` etc.: pure Column partials (translate-based)
+- ``fold_quotes_dashes_col()``: a pure Column partial (translate-based)
   for SQL-oracle-checkable queries that don't need NFKC.
 """
 
@@ -251,16 +251,6 @@ def fold_quotes_dashes_col(col: Column) -> Column:
         SINGLE_QUOTES + DOUBLE_QUOTES + HYPHENS + DASHES,
         "'" * 19 + '"' * 17 + "-" * 12 + "\u2013" * 12,
     )
-
-
-def normalize_spaces_col(col: Column) -> Column:
-    """Pure-JVM Zs → space (F2)."""
-    return F.regexp_replace(col, r"\p{Zs}", " ")
-
-
-def strip_control_col(col: Column) -> Column:
-    """Pure-JVM category-C removal keeping U+200D (F3)."""
-    return F.regexp_replace(col, "[\\p{C}&&[^\\u200D]]", "")
 
 
 if sys.maxunicode < 0x10FFFF:  # pragma: no cover

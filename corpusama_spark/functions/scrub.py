@@ -49,13 +49,6 @@ def scrub_caption(col: Column | str, terms: list[str] | None = None) -> Column:
     return out
 
 
-def scrub_count(col: Column | str) -> Column:
-    """Number of scrub tokens present post-scrub (metrics column)."""
-    return F.regexp_count(
-        scrub_caption(col), F.lit(r"<(EMAIL|URL|IP|PHONE|ID|TOX)>")
-    )
-
-
 AUDIT_NAMES = ("n_email", "n_url", "n_ip", "n_phone", "n_id")
 
 

@@ -6,12 +6,13 @@ collapse, all-caps lowering) and its keep/drop predicates
 (corpusama/corpus/export.py:23-29,104-111; corpusama/util/convert.py:53-81;
 pipeline/stanza/secondary_pipeline.py:226-239) as:
 
-- a Python kernel (`clean_lines`) used inside the single Arrow prep UDF and
-  as the test oracle, and
+- one Python kernel, ``_prep_batch``: per Arrow batch of captions, each
+  line is normalized (``normalize.normalize_text``) and cleaned by
+  ``_clean_segment``. The filter job's UDF (``fused._text_batch``) and
+  ``prep_caption`` both call it. ``clean_line`` / ``clean_lines`` apply
+  the same two steps to single lines: they train the language-ID and
+  perplexity models and serve as the test oracle;
 - pure-JVM Column predicates for everything SQL-expressible.
-
-The one pandas UDF (`prep_caption`) does normalize + clean in a single Arrow
-pass per caption, returning a struct — downstream stages are all JVM-side.
 """
 
 from __future__ import annotations
@@ -41,18 +42,24 @@ _DROP_TABLE = str.maketrans({c: " " for c in DROP_ALL})
 NAN_STRINGS = ("none", "null", "nan")
 
 
-def clean_line(raw_line: str) -> str | None:
-    """Normalize + clean ONE raw line; None if nothing survives.
-
-    Matches clean_lines (util/langid.py:94-103) element-wise: uninorm
-    normalize (multi-segment output joined back by the whitespace translate),
-    drop-char translate, whitespace collapse, all-caps lowering.
-    """
-    x = normalize_text(raw_line).translate(_DROP_TABLE)
+def _clean_segment(seg: str) -> str | None:
+    """Drop-char translate, whitespace collapse and all-caps lowering of
+    ONE normalized segment; None if nothing survives."""
+    x = seg.translate(_DROP_TABLE)
     if not x.strip():
         return None
     x = " ".join(x.split())
     return x.lower() if x.isupper() else x
+
+
+def clean_line(raw_line: str) -> str | None:
+    """Normalize + clean ONE raw line; None if nothing survives.
+
+    Matches clean_lines (util/langid.py:94-103) element-wise: uninorm
+    normalize (multi-segment output joined back by the whitespace
+    translate), then ``_clean_segment``.
+    """
+    return _clean_segment(normalize_text(raw_line))
 
 
 def clean_lines(lines: list[str]) -> list[str]:
@@ -74,6 +81,10 @@ PREP_SCHEMA = StructType(
 
 
 def _prep_batch(captions: pd.Series) -> pd.DataFrame:
+    """One Arrow batch of captions → (caption_norm, lines): each caption
+    line normalized once; the segments joined are ``caption_norm``, and
+    the ones that survive ``_clean_segment`` are ``lines``. A non-string
+    caption yields NULL for both."""
     norms: list[str | None] = []
     lines_col: list[list[str] | None] = []
     for cap in captions:
@@ -81,16 +92,11 @@ def _prep_batch(captions: pd.Series) -> pd.DataFrame:
             norms.append(None)
             lines_col.append(None)
             continue
-        raw_lines = cap.split("\n")
-        segs = [normalize_text(line) for line in raw_lines]
+        segs = [normalize_text(line) for line in cap.split("\n")]
         norms.append("".join(segs))
-        cleaned = []
-        for seg in segs:
-            x = seg.translate(_DROP_TABLE)
-            if x.strip():
-                x = " ".join(x.split())
-                cleaned.append(x.lower() if x.isupper() else x)
-        lines_col.append(cleaned)
+        lines_col.append(
+            [x for seg in segs if (x := _clean_segment(seg)) is not None]
+        )
     return pd.DataFrame({"caption_norm": norms, "lines": lines_col})
 
 
@@ -114,10 +120,6 @@ def is_nanlike(col: Column) -> Column:
     the reference — a tab-only cell IS nanlike there."""
     pat = r"(?i)^\s*(" + "|".join(NAN_STRINGS) + r")?\s*$"
     return col.isNull() | col.rlike(pat)
-
-
-def nanlike_to_null(col: Column) -> Column:
-    return F.when(is_nanlike(col), F.lit(None).cast("string")).otherwise(F.trim(col))
 
 
 def drop_chars_col(col: Column) -> Column:

@@ -141,25 +141,26 @@ def registered_domain(
     url_col: Column,
     multipart: tuple[str, ...] = MULTIPART_SUFFIXES,
 ) -> Column:
-    """eTLD+1: last two host labels, or last three when the two-label tail
-    is a known multi-part public suffix. Single-label hosts (localhost,
+    """eTLD+1: last two host labels; last three when the two-label tail
+    is a known multi-part public suffix; last four when the three-label
+    tail is one (``s3.amazonaws.com``). Single-label hosts (localhost,
     bare TLDs) and IP-literal hosts pass through unchanged — slicing an
     IP's "labels" yields nonsense ("1.2.3.4" → "3.4") and defeats
     blocklist matching (ADVICE r3)."""
     host = url_host(url_col)
     labels = F.split(host, r"\.")
     n = F.size(labels)
-    last2 = F.concat_ws(
-        ".", F.element_at(labels, -2), F.element_at(labels, -1)
-    )
-    last3 = F.concat_ws(
-        ".",
-        F.element_at(labels, -3),
-        F.element_at(labels, -2),
-        F.element_at(labels, -1),
-    )
+
+    def last(k: int) -> Column:
+        # try_: a host of fewer than k labels yields itself, not an ANSI
+        # index error, so a bare suffix ("co.uk") passes through whole
+        tail = (F.try_element_at(labels, F.lit(-i)) for i in range(k, 0, -1))
+        return F.concat_ws(".", *tail)
+
     return F.when(host.isNull() | (n <= 1) | is_ip_host(host), host).otherwise(
-        F.when((n >= 3) & last2.isin(*multipart), last3).otherwise(last2)
+        F.when(last(3).isin(*multipart), last(4))
+        .when(last(2).isin(*multipart), last(3))
+        .otherwise(last(2))
     )
 
 

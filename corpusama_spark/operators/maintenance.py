@@ -51,8 +51,7 @@ def orphan_scan(out_path: str, snap_dir: str) -> dict:
     orphan_bytes, litter, orphan_deletes}. ``orphan_deletes`` lists the
     equality-delete files under ``_deletes/eq/`` that no snapshot names
     (a ``commit_eq_delete`` that lost the id race, or a delete whose
-    snapshot expiry squashed away); ``vacuum_orphans`` leaves them in
-    place. Never deletes."""
+    snapshot expiry squashed away). Never deletes."""
     from corpusama_spark.tableops import storage_live_buckets
 
     root = pathlib.Path(out_path)
@@ -121,29 +120,33 @@ def vacuum_orphans(
 ) -> dict:
     """Execute the orphan plan, skipping anything younger than
     ``older_than_s`` (a writer racing the vacuum has fresh mtimes —
-    Iceberg's older_than guard). Returns {removed_buckets, removed_files,
-    skipped_young}. Committed data is untouched by construction: the
-    plan only ever lists buckets absent from every published snapshot."""
+    Iceberg's older_than guard). Returns {removed_buckets,
+    removed_deletes, removed_files, skipped_young}. Committed data is
+    untouched by construction: the plan only ever lists buckets absent
+    from every published snapshot and delete files no snapshot names."""
     import shutil
 
     plan = orphan_scan(out_path, snap_dir)
     now = time.time()
     removed_buckets: list[int] = []
+    removed_deletes: list[str] = []
     removed_files = 0
     skipped_young: list[str] = []
     root = pathlib.Path(out_path)
-    for b in plan["orphan_buckets"]:
-        d = root / f"{_BUCKET_PREFIX}{b}"
-        newest = max(
-            (f.stat().st_mtime for f in d.rglob("*") if f.is_file()),
-            default=0.0,
-        )
+    orphans = [(b, root / f"{_BUCKET_PREFIX}{b}") for b in plan["orphan_buckets"]]
+    orphans += [(None, pathlib.Path(f)) for f in plan["orphan_deletes"]]
+    for b, d in orphans:
+        files = [f for f in d.rglob("*") if f.is_file()]
+        newest = max((f.stat().st_mtime for f in files), default=0.0)
         if now - newest < older_than_s:
             skipped_young.append(str(d))
             continue
-        removed_files += sum(1 for f in d.rglob("*") if f.is_file())
+        removed_files += len(files)
         shutil.rmtree(d)
-        removed_buckets.append(b)
+        if b is None:
+            removed_deletes.append(str(d))
+        else:
+            removed_buckets.append(b)
     for item in plan["litter"]:
         p = pathlib.Path(item)
         if not p.exists():
@@ -157,6 +160,7 @@ def vacuum_orphans(
             p.unlink()
     return {
         "removed_buckets": removed_buckets,
+        "removed_deletes": removed_deletes,
         "removed_files": removed_files,
         "skipped_young": skipped_young,
     }

@@ -134,24 +134,6 @@ def run_pipeline(captions: DataFrame, config: FilterConfig = FilterConfig()) -> 
     return _decide(_derive(scanned), config)
 
 
-def _apply_text_stage(text: DataFrame, config: FilterConfig) -> DataFrame:
-    """The text stage alone (functions/fused.text_stage) plus the JVM
-    derivations; tests pin it against the distributed langid operators."""
-    from corpusama_spark.functions.fused import text_stage
-
-    return _derive(
-        text.select(
-            "*",
-            text_stage(
-                "caption",
-                min_len=config.min_len,
-                threshold=config.threshold,
-                max_langs=config.max_langs,
-            ).alias("_s"),
-        )
-    )
-
-
 def _derive(df: DataFrame) -> DataFrame:
     """Unpack the UDF struct ``_s``, then the JVM-side scrub exprs and
     lid-map derivation."""

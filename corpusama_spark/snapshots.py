@@ -112,8 +112,12 @@ def _visible(snap_dir: str, snapshot_id: int | None = None):
 
 
 def latest_snapshot_id(snap_dir: str) -> int | None:
-    snaps = snapshots(snap_dir)
-    return snaps[-1]["snapshot_id"] if snaps else None
+    """The highest id in the log, read from the file names alone (each
+    doc's file is named after its id), so a commit parses no existing
+    doc."""
+    p = pathlib.Path(snap_dir)
+    ids = [int(f.stem[len(_PREFIX):]) for f in p.glob(f"{_PREFIX}*.json")]
+    return max(ids, default=None)
 
 
 def partition_specs(snap_dir: str) -> dict[int, dict]:

@@ -15,7 +15,7 @@ JOB = (
     "corpusama_spark.pipeline",
     "corpusama_spark.streaming.incremental",
 )
-MAX_LINES = 3200
+MAX_LINES = 3125
 
 PROBE = f"""
 import importlib, json, sys

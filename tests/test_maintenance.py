@@ -93,3 +93,31 @@ def test_small_file_report_and_compaction(spark, tmp_path):
     assert after == before
     rep2 = {r["bucket"]: r for r in small_file_report(out, snaps)}
     assert not rep2[0]["needs_compaction"] or rep2[0]["n_files"] == 1
+
+
+def test_vacuum_reclaims_old_orphan_delete_files(spark, tmp_path):
+    """An equality-delete file no snapshot names is reclaimed once it is
+    older than the guard; a young orphan and a delete a snapshot names
+    stay."""
+    from corpusama_spark.tableops import commit_eq_delete
+
+    out, snaps = _setup(spark, tmp_path)
+    keys = spark.createDataFrame([(5,)], "image_id long")
+    commit_eq_delete(keys, out, snaps, "erase")
+    eq_dir = pathlib.Path(out) / "_deletes" / "eq"
+    (named,) = eq_dir.iterdir()
+    for name in ("del-old-orphan", "del-young-orphan"):
+        keys.write.parquet(str(eq_dir / name))
+    old = time.time() - 7200
+    for d in (named, eq_dir / "del-old-orphan"):
+        for f in d.rglob("*"):
+            os.utime(f, (old, old))
+
+    res = vacuum_orphans(out, snaps, older_than_s=3600)
+    assert not (eq_dir / "del-old-orphan").exists()
+    assert res["removed_deletes"] == [str(eq_dir / "del-old-orphan")]
+    assert (eq_dir / "del-young-orphan").exists() and named.exists()
+    assert str(eq_dir / "del-young-orphan") in res["skipped_young"]
+    assert orphan_scan(out, snaps)["orphan_deletes"] == [
+        str(eq_dir / "del-young-orphan")
+    ]

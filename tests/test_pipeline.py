@@ -14,7 +14,6 @@ from corpusama_spark.functions.perplexity import get_model
 from corpusama_spark.functions.seedtext import SEED_SENTENCES
 from corpusama_spark.pipeline import (
     FilterConfig,
-    _apply_text_stage,
     choose_plan,
     metrics,
     run_pipeline,
@@ -188,21 +187,25 @@ BROUND_CAPTION = "The distribution of emerg\nLa distribution"
 
 
 def test_fused_text_stage_equals_distributed_langid(spark):
-    """The fused text-stage kernel (functions/fused.py) must be
-    value-identical to the distributed langid operators
-    explode_lines → label_lines → aggregate_lid over prep_caption's lines,
-    left-joined back so captions without lines read NULL."""
+    """The production filter UDF (``run_pipeline``'s ``filter_stage``)
+    must give language-ID columns value-identical to the distributed
+    langid operators explode_lines → label_lines → aggregate_lid over
+    prep_caption's lines, left-joined back so captions without lines
+    read NULL."""
     cfg = FilterConfig()
-    caps = captions_df(spark, 400, partitions=8).select("image_id", "caption")
+    caps = captions_df(spark, 400, partitions=8)
     edges = spark.createDataFrame(
-        [("edge-empty", EMPTY_LID_CAPTION), ("edge-bround", BROUND_CAPTION)],
-        "image_id string, caption string",
+        [
+            ("edge-empty", None, 8, 8, "png", EMPTY_LID_CAPTION, 0),
+            ("edge-bround", None, 8, 8, "png", BROUND_CAPTION, 0),
+        ],
+        caps.schema,
     )
     text = caps.unionByName(edges)
     cols = ["image_id", "lid", "lid_arr", "l1", "l1_size", "multiling"]
     fused = {
         r["image_id"]: r.asDict(recursive=True)
-        for r in _apply_text_stage(text, cfg).select(*cols).collect()
+        for r in run_pipeline(text, cfg).select(*cols).collect()
     }
     prepped = text.select(
         "image_id", T.prep_caption("caption").alias("p")

@@ -141,3 +141,29 @@ def test_expiry_keeps_restart_done_ness_and_counts(spark, tmp_path):
         for r in backfill_plan(spark, log, cfg).collect()
     )
     assert S.fast_count(log) == kept
+
+
+def test_commit_loads_no_existing_doc(tmp_path, monkeypatch):
+    """The next id comes from the file names: a commit onto a 200-doc log
+    parses none of them, while ``snapshots()`` still parses every doc
+    and raises on a corrupt one."""
+    import corpusama_spark.snapshots as S
+
+    d = str(tmp_path / "snaps")
+    for i in range(200):
+        commit_snapshot(d, "r1", [i % 8], 1, 1)
+    loads = []
+    real_load = json.load
+
+    def counting_load(fh, *a, **kw):
+        loads.append(fh.name)
+        return real_load(fh, *a, **kw)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    assert commit_snapshot(d, "r2", [3], 1, 1) == 201
+    assert loads == []
+    monkeypatch.undo()
+    assert snapshots(d)[-1]["parent_id"] == 200
+    S._snap_path(d, 7).write_text("{torn")
+    with pytest.raises(json.JSONDecodeError):
+        snapshots(d)

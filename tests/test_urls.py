@@ -209,3 +209,27 @@ def test_canonical_url_cases(spark):
     }
     for i, (_, want) in enumerate(cases):
         assert got[i] == want, (i, cases[i][0], got[i], want)
+
+
+def test_three_label_suffix_keeps_four_labels(spark):
+    """``s3.amazonaws.com`` is a three-label public suffix: each bucket
+    host is its own registered domain, not ``amazonaws.com``."""
+    got = _dom(
+        spark,
+        [
+            "https://bucket.s3.amazonaws.com/a.jpg",
+            "https://other.s3.amazonaws.com/b.jpg",
+            "https://x.y.bucket.s3.amazonaws.com/c",
+            "https://s3.amazonaws.com/d",
+            "https://co.uk/e",
+        ],
+    )
+    assert got["https://bucket.s3.amazonaws.com/a.jpg"][1] == (
+        "bucket.s3.amazonaws.com")
+    assert got["https://other.s3.amazonaws.com/b.jpg"][1] == (
+        "other.s3.amazonaws.com")
+    assert got["https://x.y.bucket.s3.amazonaws.com/c"][1] == (
+        "bucket.s3.amazonaws.com")
+    # a bare public suffix passes through whole
+    assert got["https://s3.amazonaws.com/d"][1] == "s3.amazonaws.com"
+    assert got["https://co.uk/e"][1] == "co.uk"
